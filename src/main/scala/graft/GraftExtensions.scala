@@ -24,9 +24,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), b))
     }
-    // Whole-operator extension: the bounded per-key top-k planner
-    // strategy (graft.plans.TopKPerKey). GraftOps.topKPerKey also
-    // installs it lazily per session, so both entry paths work.
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    // Planner extensions (the top-k strategy, the order-aware window
+    // exchange rule); table loads also install them lazily per
+    // session, so both entry paths work.
+    graft.plans.PlannerExtensions.inject(ext)
   }
 }

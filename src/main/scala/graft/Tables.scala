@@ -40,6 +40,7 @@ object Tables {
     // Write timestamps as µs (not legacy INT96 nanos) so dumped results
     // carry the same physical type the DuckDB oracle produces.
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    graft.plans.PlannerExtensions.install(spark)
     val perSession = cache.computeIfAbsent(spark,
       _ => scala.collection.concurrent.TrieMap.empty)
     val key = (sfDir, name)

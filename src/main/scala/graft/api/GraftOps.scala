@@ -785,18 +785,11 @@ object GraftOps {
     * plan's full per-partition sort (the spill shape at scale). Rows
     * rank by `orderCol` DESC with `tieCol` ASC making the order total,
     * so output and ranks are deterministic. Appends a `rn` rank
-    * column. Installs the planner strategy on first use. */
+    * column. Installs the planner extensions on first use. */
   def topKPerKey(df: DataFrame, keyCols: Seq[String], orderCol: String,
       tieCol: String, k: Int): DataFrame = {
     val spark = df.sparkSession
-    // synchronized: the check-then-append below is a race when query
-    // threads share a session — a double-appended strategy is merely
-    // redundant for the planner, but keep the list canonical
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.TopKStrategy
-    }
+    graft.plans.PlannerExtensions.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String) = analyzed.output
       .find(_.name == n)

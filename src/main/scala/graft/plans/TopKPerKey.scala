@@ -106,17 +106,7 @@ case class TopKPerKeyExec(
 }
 
 /** Planner strategy mapping the logical node to the heap exec.
-  * Installed per-session through `spark.experimental.extraStrategies`
-  * (done lazily by [[graft.api.GraftOps.topKPerKey]]) or fleet-wide
-  * via [[graft.GraftExtensions]].
-  *
-  * Locking convention (ADVICE r12): the lazy install's check-then-
-  * append synchronizes on `spark.experimental` — external code that
-  * also mutates `extraStrategies` at runtime must take the same
-  * monitor, or a concurrent interleave can append a redundant
-  * duplicate entry (harmless to planning — the strategy is
-  * idempotent — but the list stops being canonical). Extension-based
-  * installs never race: they run once at session build. */
+  * Installed per session or fleet-wide by [[PlannerExtensions]]. */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKey(keys, order, k, child, rn) =>

@@ -471,4 +471,29 @@ class AdversarialInputSuite extends SparkTestBase {
       () => GraftOps.triangleCensus(edgeNulls, "src", "dst"),
       () => GraftOps.triangleCensus(edgeWrong, "src", "dst"))
   }
+
+  // ---------------------------------------------------------------
+  // Fixture invariants the kernels rely on
+  // ---------------------------------------------------------------
+
+  test("events.value is exactly 2-dp on every fixture: floor(v*100+0.5) is HALF_UP cents") {
+    // The money paths (ev_tumbling, win_ewma, ev_zscore_outlier) round with
+    // floor(value*100 + 0.5) instead of round(value, 2): equal to
+    // HALF_UP only while value*100 lies within float error of an
+    // integer. A corpus with a third decimal would silently shift
+    // cents at every .xx5 boundary; this pins the invariant.
+    val dirs = Seq(sf, sf01, sfSibling("sf0.1"))
+      .filter(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d, "events.parquet")))
+    assert(dirs.nonEmpty, "no events fixture found")
+    for (d <- dirs) {
+      val ev = Tables.events(spark, d).filter(col("value").isNotNull)
+      assert(ev.count() > 0, s"$d: no non-null event values")
+      val bad = ev.filter(org.apache.spark.sql.functions.expr(
+        "abs(value * 100 - rint(value * 100)) > 1e-6 OR " +
+          "cast(floor(value * 100 + 0.5) AS BIGINT) <> " +
+          "cast(round(cast(value AS DECIMAL(20,6)), 2) * 100 AS BIGINT)"))
+      assert(bad.count() == 0,
+        s"$d: events.value not exactly 2-dp, e.g. ${bad.limit(3).collect().mkString(", ")}")
+    }
+  }
 }

@@ -461,9 +461,9 @@ class EdgeCaseSuite extends SparkTestBase {
   test("concurrent queries on a shared session match their serial results") {
     // A real deployment multiplexes query threads over one session.
     // This exercises the shared mutable surfaces at once: FitOnce
-    // checkpoint fills, function self-registration, and topKPerKey's
-    // planner-strategy injection (a check-then-act on
-    // experimental.extraStrategies).
+    // checkpoint fills, function self-registration, and the lazy
+    // planner-extension install (a check-then-act on
+    // experimental.extraStrategies/extraOptimizations).
     val names = Seq("agg_q1_pricing", "win_topk_native", "llm_ann_ivf",
       "llm_near_dedup", "llm_simhash_neardup", "fn_json", "ev_session",
       "llm_tfidf")
@@ -485,5 +485,8 @@ class EdgeCaseSuite extends SparkTestBase {
     val strategies = spark.experimental.extraStrategies
     assert(strategies.count(_ == graft.plans.TopKStrategy) <= 1,
       "TopKStrategy must not be double-injected by racing threads")
+    assert(spark.experimental.extraOptimizations
+      .count(_ == graft.plans.OrderAwareWindowExchange) <= 1,
+      "OrderAwareWindowExchange must not be double-injected by racing threads")
   }
 }

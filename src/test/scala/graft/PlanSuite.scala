@@ -746,4 +746,166 @@ class PlanSuite extends SparkTestBase {
         s"pair self-join added extra exchanges ($exchanges):\n" + p)
     }
   }
+
+  // ------------------------------------------------------------------
+  // Order-aware window exchange (graft.plans.OrderAwareWindowExchange)
+  // ------------------------------------------------------------------
+
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.catalyst.expressions.{Descending, NullsLast, SortOrder}
+  import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RepartitionByExpression, Window => WindowNode, WindowGroupLimit}
+  import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  import org.apache.spark.sql.execution.window.WindowExec
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.functions.{col, rank}
+
+  private object aqe extends AdaptiveSparkPlanHelper
+
+  /** The range repartitions the rule inserts: directly under a window
+    * (or group limit), on sort orders, with no fixed partition count. */
+  private def inserted(p: LogicalPlan): Seq[RepartitionByExpression] =
+    p.collect { case w @ (_: WindowNode | _: WindowGroupLimit) => w.children.head }
+      .collect { case r: RepartitionByExpression
+        if r.optNumPartitions.isEmpty &&
+          r.partitionExpressions.forall(_.isInstanceOf[SortOrder]) => r }
+
+  private def fired(df: DataFrame): Int =
+    inserted(df.queryExecution.optimizedPlan).size
+
+  /** The final executed plan of `df` materialized through the noop
+    * sink (the benchmark's materialization). */
+  private def noopPlan(df: DataFrame): SparkPlan = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val got = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        got.put(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      Option(got.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("no executed plan reported for the noop write"))
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+    aqe.collect(p) { case e: ShuffleExchangeExec => e }
+
+  /** 200 rows, three bigint columns, no nulls. */
+  private def abc = spark.range(0, 200)
+    .selectExpr("id % 7 AS a", "id % 13 AS b", "id AS c")
+
+  test("win_rank_dense: one range shuffle under the windows serves the ORDER BY") {
+    val p = noopPlan(operators.Windows.winRankDense(spark, sf))
+    val ex = shuffles(p)
+    assert(ex.size == 1, s"expected exactly one shuffle exchange:\n$p")
+    ex.head.outputPartitioning match {
+      case RangePartitioning(Seq(o), _) =>
+        assert(o.child.references.map(_.name).toSet == Set("p_brand"),
+          s"the shuffle must range-partition on p_brand:\n$p")
+      case other => fail(s"expected rangepartitioning(p_brand), got $other")
+    }
+    val windows = aqe.collect(p) { case w: WindowExec => w }
+    assert(windows.nonEmpty && windows.forall(w => shuffles(w).size == 1),
+      s"the range shuffle must sit below every window:\n$p")
+    assert(!ex.exists(_.outputPartitioning match {
+      case r: RangePartitioning => r.ordering.size == 3
+      case _ => false
+    }), s"no range exchange over the three sort keys may remain:\n$p")
+  }
+
+  test("order-aware window exchange never reaches a count() plan") {
+    // The scored protocol is count(): its Sort (and often its Window)
+    // is pruned before the rule runs, so no count plan may change.
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, fn) if inserted(fn(spark, sf).groupBy().count()
+        .queryExecution.optimizedPlan).nonEmpty => name
+    }
+    assert(offenders.isEmpty, s"count() plans carrying the range shuffle: $offenders")
+    // Not vacuous: the same detector sees the rule in the full plan.
+    assert(fired(operators.Windows.winRankDense(spark, sf)) == 1)
+  }
+
+  test("order-aware window exchange fires only on the matching shape") {
+    val byA = Window.partitionBy("a").orderBy("b", "c")
+    val ranked = abc.withColumn("r", rank().over(byA))
+    assert(fired(ranked.orderBy("a", "b", "c")) == 1, "the matching shape")
+    assert(fired(abc.withColumn("r", rank().over(Window.partitionBy("a", "b")
+      .orderBy("c"))).orderBy("b", "a", "c")) == 1,
+      "leading sort keys match the partition SET in any order")
+    assert(fired(ranked.orderBy("a", "b").limit(5)) == 0,
+      "a limit over the sort plans a top-k, with no range exchange to save")
+    assert(fired(ranked.orderBy("b", "a")) == 0,
+      "sort prefix is not the partition set")
+    assert(fired(abc.withColumn("r", rank().over(Window.orderBy("b", "c")))
+      .orderBy("a", "b")) == 0, "a global window has no partition set")
+    assert(fired(ranked.withColumn("s", rank().over(Window.partitionBy("b")
+      .orderBy("c"))).orderBy("a", "b")) == 0, "windows partitioned differently")
+    assert(fired(abc.withColumn("a", col("a").cast("double"))
+      .withColumn("r", rank().over(byA)).orderBy("a", "b", "c")) == 0,
+      "a floating-point key is normalized under the window, so it is skipped")
+  }
+
+  test("order-aware window exchange keeps DESC / NULLS LAST sort orders") {
+    val df = abc.withColumn("r", rank().over(Window.partitionBy("a").orderBy("b", "c")))
+      .orderBy(col("a").desc_nulls_last, col("b"), col("c"))
+    val rs = inserted(df.queryExecution.optimizedPlan)
+    assert(rs.size == 1)
+    val so = rs.head.partitionExpressions.map(_.asInstanceOf[SortOrder])
+    assert(so.size == 1 && so.head.direction == Descending &&
+      so.head.nullOrdering == NullsLast, s"range key lost its sort order: $so")
+    assert(shuffles(noopPlan(df)).size == 1,
+      "the DESC range shuffle must still serve the sort")
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val want = got.sortBy { case (a, b, c) => (-a, b, c) }
+    assert(got == want, "result order changed")
+  }
+
+  test("order-aware window exchange leaves streaming plans alone") {
+    val dir = Tables.scratchDir("graft_oawe_stream_").resolve("in").toString
+    abc.write.parquet(dir)
+    def shape(d: DataFrame) = d.withColumn("r", rank()
+      .over(Window.partitionBy("a").orderBy("b", "c"))).orderBy("a", "b", "c")
+    val streaming = shape(spark.readStream.schema(abc.schema).parquet(dir))
+      .queryExecution.analyzed
+    assert(streaming.isStreaming)
+    assert(plans.OrderAwareWindowExchange(streaming) fastEquals streaming)
+    val batch = shape(spark.read.parquet(dir)).queryExecution.analyzed
+    assert(inserted(plans.OrderAwareWindowExchange(batch)).size == 1,
+      "the batch twin of the same shape must fire")
+  }
+
+  test("order-aware window exchange is idempotent with both install paths active") {
+    import org.apache.spark.sql.SparkSession
+    val prev = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .withExtensions(new GraftExtensions).getOrCreate()
+      assert(s2 ne prev, "expected a fresh session over the shared context")
+      def shape = s2.range(0, 200).selectExpr("id % 7 AS a", "id AS c")
+        .withColumn("r", rank().over(Window.partitionBy("a").orderBy("c")))
+        .orderBy("a", "c")
+      assert(s2.experimental.extraOptimizations.isEmpty)
+      assert(fired(shape) == 1, "the extension (pre-CBO) path alone must fire")
+      plans.PlannerExtensions.install(s2)
+      plans.PlannerExtensions.install(s2)
+      assert(s2.experimental.extraOptimizations ==
+        Seq(plans.OrderAwareWindowExchange), "install must be idempotent")
+      val opt = shape.queryExecution.optimizedPlan
+      assert(inserted(opt).size == 1, s"both paths active inserted twice:\n$opt")
+      assert(plans.OrderAwareWindowExchange(opt) fastEquals opt,
+        "a second application must change nothing")
+    } finally {
+      SparkSession.setActiveSession(prev)
+      SparkSession.setDefaultSession(prev)
+    }
+  }
 }
