@@ -25,7 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[GraftExtensions].getName, name), b))
     }
     // Planner extensions (the top-k strategy, the order-aware window
-    // exchange rule); table loads also install them lazily per
+    // exchange and JSON field rules); table loads also install them lazily per
     // session, so both entry paths work.
     graft.plans.PlannerExtensions.inject(ext)
   }

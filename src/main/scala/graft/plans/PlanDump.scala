@@ -25,7 +25,7 @@ object PlanDump {
     "join_interval_overlap", "ev_scd2", "llm_ann_pq",
     "ev_markov_transition", "ev_rolling_wau", "llm_pmi_bigrams",
     "graph_triangles", "graph_pagerank", "agg_heavy_hitters",
-    "ev_peak_concurrency", "llm_e2e_curation")
+    "ev_peak_concurrency", "llm_e2e_curation", "fn_json")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

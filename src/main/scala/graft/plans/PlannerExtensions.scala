@@ -1,19 +1,21 @@
 package graft.plans
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** graft's planner extensions, installed one of two ways:
   *
   *   - per session, lazily: [[install]] appends them to
   *     `spark.experimental` (the strategy to `extraStrategies`, the
-  *     rule to `extraOptimizations`, which run after every built-in
+  *     rules to `extraOptimizations`, which run after every built-in
   *     optimizer batch). Called by every table load and by
   *     `GraftOps.topKPerKey`, so a plain session picks them up before
   *     its first graft plan is optimized;
   *   - deployment-wide: [[inject]] from [[graft.GraftExtensions]] (the
-  *     rule as a pre-CBO rule, after operator optimization).
+  *     rules as pre-CBO rules, after operator optimization).
   *
-  * Both paths may be active on one session; the strategy and the rule
+  * Both paths may be active on one session; the strategy and the rules
   * are idempotent, so running either twice changes nothing.
   *
   * Locking convention (ADVICE r12): the install's check-then-append
@@ -25,18 +27,23 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * build. */
 object PlannerExtensions {
 
+  /** The optimizer rules, in the order they run. */
+  val Rules: Seq[Rule[LogicalPlan]] = Seq(OrderAwareWindowExchange, JsonFieldRewrite)
+
   def install(spark: SparkSession): Unit = {
     val x = spark.experimental
     x.synchronized {
       if (!x.extraStrategies.contains(TopKStrategy))
         x.extraStrategies = x.extraStrategies :+ TopKStrategy
-      if (!x.extraOptimizations.contains(OrderAwareWindowExchange))
-        x.extraOptimizations = x.extraOptimizations :+ OrderAwareWindowExchange
+      Rules.foreach { r =>
+        if (!x.extraOptimizations.contains(r))
+          x.extraOptimizations = x.extraOptimizations :+ r
+      }
     }
   }
 
   def inject(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKStrategy)
-    ext.injectPreCBORule(_ => OrderAwareWindowExchange)
+    Rules.foreach(r => ext.injectPreCBORule(_ => r))
   }
 }

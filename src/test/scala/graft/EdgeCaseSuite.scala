@@ -488,5 +488,8 @@ class EdgeCaseSuite extends SparkTestBase {
     assert(spark.experimental.extraOptimizations
       .count(_ == graft.plans.OrderAwareWindowExchange) <= 1,
       "OrderAwareWindowExchange must not be double-injected by racing threads")
+    assert(spark.experimental.extraOptimizations
+      .count(_ == graft.plans.JsonFieldRewrite) <= 1,
+      "JsonFieldRewrite must not be double-injected by racing threads")
   }
 }

@@ -649,6 +649,10 @@ class PlanSuite extends SparkTestBase {
       assert(llm.Ann.kmeansFit(e, 4, 1).count() >= 0)
       assert(llm.Ann.cosNearDup(s, sf).count() >= 0)
       assert(llm.TextHash.simhashNearDup(s, sf).count() >= 0) // SimHash62
+      // JsonField: count() prunes the extraction, so materialize.
+      val json = functions.Scalars.fnJson(s, sf)
+      assert(jsonExprs(json.queryExecution.optimizedPlan) == ((1, 0)))
+      assert(json.collect().nonEmpty)
     } finally s.conf.set("spark.sql.codegen.fallback", prev)
   }
 
@@ -898,11 +902,80 @@ class PlanSuite extends SparkTestBase {
       plans.PlannerExtensions.install(s2)
       plans.PlannerExtensions.install(s2)
       assert(s2.experimental.extraOptimizations ==
-        Seq(plans.OrderAwareWindowExchange), "install must be idempotent")
+        plans.PlannerExtensions.Rules, "install must be idempotent")
       val opt = shape.queryExecution.optimizedPlan
       assert(inserted(opt).size == 1, s"both paths active inserted twice:\n$opt")
       assert(plans.OrderAwareWindowExchange(opt) fastEquals opt,
         "a second application must change nothing")
+    } finally {
+      SparkSession.setActiveSession(prev)
+      SparkSession.setDefaultSession(prev)
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // JSON field kernel (graft.plans.JsonFieldRewrite)
+  // ------------------------------------------------------------------
+
+  import org.apache.spark.sql.catalyst.expressions.GetJsonObject
+
+  /** (JsonField kernels, GetJsonObject calls) anywhere in `p`. */
+  private def jsonExprs(p: LogicalPlan): (Int, Int) = {
+    val es = p.collectWithSubqueries { case n => n.expressions }.flatten
+    (es.map(_.collect { case j: functions.JsonField => j }.size).sum,
+      es.map(_.collect { case g: GetJsonObject => g }.size).sum)
+  }
+
+  /** 20 rows: `j` = {"k":<id>,"a":{"b":<id>}}, built per row so
+    * nothing folds to a literal. */
+  private def jsonRows = spark.range(0, 20)
+    .selectExpr("concat('{\"k\":', id, ',\"a\":{\"b\":', id, '}}') AS j", "id")
+
+  test("fn_json runs the JSON field kernel; its count() plan has no JSON work") {
+    val df = functions.Scalars.fnJson(spark, sf)
+    val opt = df.queryExecution.optimizedPlan
+    assert(jsonExprs(opt) == ((1, 0)), s"expected the kernel and no get_json_object:\n$opt")
+    val cnt = df.groupBy().count().queryExecution.optimizedPlan
+    assert(jsonExprs(cnt) == ((0, 0)), s"count() must prune the extraction:\n$cnt")
+    assert(plans.JsonFieldRewrite(cnt) fastEquals cnt)
+  }
+
+  test("JSON field rule fires only on a literal top-level key path") {
+    def kernels(path: String) =
+      jsonExprs(jsonRows.selectExpr(s"get_json_object(j, $path) AS v")
+        .queryExecution.optimizedPlan)
+    Seq("'$.k'", "'$.k_1'", "'$._x'", "'$.K9'").foreach(p =>
+      assert(kernels(p) == ((1, 0)), s"$p must use the kernel"))
+    Seq("'$.a.b'", "'$.a[0]'", "'$[\\'k\\']'", "'$.*'", "'$.1a'", "'$'", "'$.'",
+      "' $.k'", "if(id >= 0, '$.k', '$.a')").foreach(p =>
+      assert(kernels(p) == ((0, 1)), s"$p must keep get_json_object"))
+    val got = jsonRows.selectExpr("get_json_object(j, '$.k')", "get_json_object(j, '$.a.b')",
+      "cast(id AS string)").collect()
+    assert(got.forall(r => r.getString(0) == r.getString(2) && r.getString(1) == r.getString(2)))
+  }
+
+  test("JSON field rule is idempotent with both install paths active") {
+    import org.apache.spark.sql.SparkSession
+    val prev = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .withExtensions(new GraftExtensions).getOrCreate()
+      assert(s2 ne prev, "expected a fresh session over the shared context")
+      def shape = s2.range(0, 20).selectExpr("concat('{\"k\": ', id, '}') AS j")
+        .selectExpr("get_json_object(j, '$.k') AS k")
+      assert(s2.experimental.extraOptimizations.isEmpty)
+      assert(jsonExprs(shape.queryExecution.optimizedPlan) == ((1, 0)),
+        "the extension (pre-CBO) path alone must fire")
+      plans.PlannerExtensions.install(s2)
+      plans.PlannerExtensions.install(s2)
+      assert(s2.experimental.extraOptimizations == plans.PlannerExtensions.Rules)
+      val opt = shape.queryExecution.optimizedPlan
+      assert(jsonExprs(opt) == ((1, 0)), s"both paths active:\n$opt")
+      assert(plans.JsonFieldRewrite(opt) fastEquals opt,
+        "a second application must change nothing")
+      assert(shape.collect().map(_.getString(0)).toSeq == (0 until 20).map(_.toString))
     } finally {
       SparkSession.setActiveSession(prev)
       SparkSession.setDefaultSession(prev)

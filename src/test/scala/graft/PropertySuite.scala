@@ -1179,4 +1179,119 @@ class PropertySuite extends SparkTestBase {
     assert(badCnt == 0, "length-diff token count diverges from size(split)")
   }
 
+
+  test("JSON field kernel equals get_json_object row for row (eval and codegen)") {
+    // The kernel answers top-level `$.name` lookups from the bytes and
+    // hands every document outside its grammar to Spark's evaluator.
+    // Both the fast path and the hand-off must give Spark's answer:
+    // checked on every fixture `events.props` value and on 12k
+    // generated documents built to hit each fallback class, through
+    // interpreted eval and through a compiled projection.
+    import java.nio.charset.StandardCharsets.UTF_8
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GetJsonObject, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.Platform
+    import org.apache.spark.unsafe.types.UTF8String
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.functions.JsonField
+
+    val fixtures = Seq("sf0.001", "sf0.01", "sf0.1").map(sfSibling)
+      .filter(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d, "events.parquet")))
+    assert(fixtures.nonEmpty, "no events fixture found")
+    val corpus: Seq[Array[Byte]] = fixtures.flatMap(d =>
+      Tables.events(spark, d).select("props").collect().map(_.getString(0).getBytes(UTF_8)))
+
+    // Generated documents: objects whose keys and values are drawn from
+    // the fast-path grammar and from every class it refuses, then
+    // optionally damaged at the byte level.
+    def q(s: String) = "\"" + s + "\""
+    val ws = Gen.oneOf("", "", " ", "  ", "\t", "\n", "\r\n")
+    val plainChars = (0x20 to 0x7e).map(_.toChar).filter(c => c != '"' && c != '\\')
+    val plainStr = Gen.choose(0, 6).flatMap(Gen.listOfN(_, Gen.oneOf(plainChars))).map(_.mkString)
+    val canonInt = Gen.oneOf(Gen.choose(-300L, 300L),
+      Gen.choose(-999999999999999999L, 999999999999999999L)).map(_.toString)
+    val oddNumber = Gen.oneOf("-0", "007", "-007", "00", "0.0", "1e3", "1E3", "1e-3",
+      "1.50", "1.5", "-1.0", "+1", ".5", "1.", "-", "1000000000000000000",
+      "9223372036854775807", "9223372036854775808", "-9223372036854775808",
+      "-9223372036854775809", "12345678901234567890123", "NaN", "Infinity")
+    val literal = Gen.oneOf("true", "false", "null", "nul", "True")
+    val escaped = Gen.oneOf("\"a\\\"b\"", "\"\\u0041\"", "\"\\u00e9\"", "\"\\ud83d\\ude00\"",
+      "\"\\n\"", "\"\\\\\"", "\"\\/\"", "\"\\x\"", "\"\\u12\"")
+    val singleQuoted = Gen.oneOf("'v'", "'it\\'s'", "''", "'7'")
+    val nonAscii = Gen.oneOf("\"é\"", "\"日本\"", "\"\uD83D\uDE00\"", "\"a\u00a0b\"")
+    val control = Gen.oneOf("\"a\u0001b\"", "\"\tx\"", "\"\u0000\"", "\"a\nb\"", "\"\u007f\"")
+    val nested = Gen.oneOf("{}", "[]", "[1,2]", "{\"k\":1}", "{\"a\":[1,{\"k\":2}]}",
+      "[\"k\"]", "{\"k\":{\"k\":\"v\"}}")
+    val value = Gen.frequency(6 -> plainStr.map(q), 6 -> canonInt, 2 -> oddNumber,
+      1 -> literal, 1 -> escaped, 1 -> singleQuoted, 1 -> nonAscii, 1 -> control,
+      1 -> nested)
+    val key = Gen.frequency(
+      10 -> Gen.oneOf("k", "k", "a", "b", "kk", "K", "k_1", "_", "", "k ").map(q),
+      1 -> Gen.oneOf("'k'", "\"\\u006b\"", "k", "\"é\"", "\"k\u0001\""))
+    val member = for { k <- key; a <- ws; b <- ws; c <- ws; v <- value } yield
+      a + k + b + ":" + c + v
+    val obj = for {
+      n <- Gen.choose(0, 5); ms <- Gen.listOfN(n, member); a <- ws; b <- ws
+    } yield a + "{" + ms.mkString("," + b) + b + "}" + a
+    val odd = Gen.oneOf("", " ", "[1]", "[{\"k\":1}]", "1", "\"k\"", "null", "{", "}",
+      "{\"k\"}", "{\"k\":}", "{,}", "{\"k\":1,}", "{\"k\":1}{\"k\":2}", "{\"k\" 1}",
+      "\uFEFF{\"k\":1}", "{\"k\":1}\u0000", "\f{\"k\":1}", "{\"k\":\u000b1}")
+    val doc: Gen[Array[Byte]] = Gen.frequency(12 -> obj, 1 -> odd).map(_.getBytes(UTF_8))
+      .flatMap { b =>
+        val cut = Gen.choose(0, b.length)
+        Gen.frequency(
+          12 -> Gen.const(b),
+          1 -> cut.map(b.take),
+          1 -> Gen.oneOf("x", "}", ",", " {}", " ", "\u0000").map(t => b ++ t.getBytes(UTF_8)),
+          1 -> Gen.zip(cut, Gen.oneOf(Seq(0xff), Seq(0xc3), Seq(0x80), Seq(0xed, 0xa0, 0x80)))
+            .map { case (i, bad) => b.take(i) ++ bad.map(_.toByte) ++ b.drop(i) },
+          1 -> Gen.zip(cut, Gen.choose(0, 255)).map { case (i, v) =>
+            if (b.isEmpty) b else b.updated(math.min(i, b.length - 1), v.toByte) })
+      }
+    val params = Gen.Parameters.default
+    val generated = (0L until 12000L).map(i => doc.pureApply(params, Seed(i)))
+
+    val inputs: Seq[UTF8String] =
+      (corpus ++ generated).map(b => UTF8String.fromBytes(b)) :+ null
+    for (name <- Seq("k", "a")) {
+      val in = BoundReference(0, StringType, nullable = true)
+      val ref = GetJsonObject(in, Literal("$." + name))
+      val kernel = JsonField(in, name)
+      assert(kernel.dataType == ref.dataType && kernel.nullable == ref.nullable)
+      val compiled = GenerateUnsafeProjection.generate(Seq(ref, kernel))
+      val bad = inputs.filter { s =>
+        val row = InternalRow(s)
+        val want = Option(ref.eval(row))
+        val out = compiled(row)
+        def at(i: Int) = if (out.isNullAt(i)) None else Some(out.getUTF8String(i).clone())
+        Option(kernel.eval(row)) != want || at(1) != want || at(0) != want
+      }
+      assert(bad.isEmpty, s"$$.$name: ${bad.size} rows differ from get_json_object, e.g. " +
+        bad.take(5).map(s => if (s == null) "NULL" else s.getBytes.mkString("[", ",", "]")))
+    }
+
+    // The speed-up must come from the fast path: it serves every
+    // fixture row, while the generated set exercises both paths.
+    val k = "k".getBytes(UTF_8)
+    val scratch = new Array[Int](JsonField.ScratchInts)
+    def falls(b: Array[Byte]) =
+      JsonField.locate(b, Platform.BYTE_ARRAY_OFFSET, b.length, k, scratch) == JsonField.Fallback
+    assert(corpus.count(falls) == 0, "fixture rows left the fast path")
+    val genFalls = generated.count(falls)
+    assert(genFalls > 2000 && generated.size - genFalls > 2000,
+      s"generated documents must exercise both paths: $genFalls of ${generated.size} fall back")
+    val fallbackClasses = Seq("{\"k\":\"a\\\"b\"}", "{'k':1}", "{\"k\":'v'}", "{\"k\":\"é\"}",
+      "{\"k\":1.5}", "{\"k\":1e3}", "{\"k\":-0}", "{\"k\":007}", "{\"k\":true}",
+      "{\"k\":null}", "{\"k\":{}}", "{\"k\":[1]}", "{\"k\":1,\"k\":2}", "{\"a\":1,\"a\":2}",
+      "{\"k\":1", "{\"k\":1} x", "{\"k\":\"\u0001\"}", "{\"k\":1234567890123456789}",
+      "", "[1]", "1", "\"k\"", "\f{}")
+    fallbackClasses.foreach(s => assert(falls(s.getBytes(UTF_8)), s"fast path took $s"))
+    Seq("{\"k\": 76}", " {\n\"a\" : \"x y\" ,\t\"k\":-5 }\r\n", "{}", "{\"k\":\"\"}",
+      "{\"k\":999999999999999999}").foreach(s =>
+      assert(!falls(s.getBytes(UTF_8)), s"fast path refused $s"))
+  }
+
 }
