@@ -58,7 +58,7 @@ object Tables {
     }
   }
 
-  /** Cached parquet scan of an arbitrary path — for FitOnce checkpoint
+  /** Cached parquet scan of an arbitrary path — for fit-once checkpoint
     * READ-BACKS (dim tables, signature tables, IVF fits): the path is
     * written once per (session, sf), but a bare `spark.read.parquet`
     * at the read site re-infers the schema on every build, and on a
@@ -203,18 +203,6 @@ object Tables {
     * input; under the pinned UTC session the cast is an identity. */
   def ntz(c: Column): Column = c.cast("timestamp_ntz")
 
-  /** Temp dir removed RECURSIVELY at JVM exit. `File.deleteOnExit`
-    * silently skips non-empty directories, so the parquet sink /
-    * checkpoint / superstep trees written under these would otherwise
-    * leak on disk across every run.
-    *
-    * Scratch lives on tmpfs (`/dev/shm`) when available: streaming
-    * checkpoints fsync every microbatch commit, and on a disk-backed
-    * /tmp that fsync is the dominant fixed cost of each short-lived
-    * streaming query. On a cluster the analog is the job-scoped fast
-    * scratch tier (local SSD / memory-backed volume) — durable
-    * production checkpoints belong on shared storage instead, which a
-    * deployment selects by passing its own checkpoint path. */
   /** Monotone count of scratch-dir allocations — the observable
     * PreparedSuite uses to enforce the side-effect declaration
     * convention (a repeat build of a memoizable query must not
@@ -234,21 +222,46 @@ object Tables {
       shm.toFile.getUsableSpace > 4L * 1024 * 1024 * 1024
   } catch { case _: Throwable => false }
 
+  /** Scratch dirs still on disk. One JVM shutdown hook, installed on
+    * first use, removes them all. */
+  private val liveScratch =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+  private lazy val scratchHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => liveScratch.forEach(d => rmTree(d.toFile))))
+
+  // Recursive: `File.deleteOnExit` silently skips non-empty directories.
+  private def rmTree(f: java.io.File): Unit = {
+    val cs = f.listFiles()
+    if (cs != null) cs.foreach(rmTree)
+    f.delete(): Unit
+  }
+
+  /** A fresh top-level temp dir `<prefix>NNN`, removed RECURSIVELY at
+    * JVM exit, so the parquet sink / checkpoint / superstep trees
+    * written under it never leak on disk across runs.
+    *
+    * Scratch lives on tmpfs (`/dev/shm`) when available: streaming
+    * checkpoints fsync every microbatch commit, and on a disk-backed
+    * /tmp that fsync is the dominant fixed cost of each short-lived
+    * streaming query. On a cluster the analog is the job-scoped fast
+    * scratch tier (local SSD / memory-backed volume) — durable
+    * production checkpoints belong on shared storage instead, which a
+    * deployment selects by passing its own checkpoint path. */
   def scratchDir(prefix: String): java.nio.file.Path = {
     scratchAllocs.incrementAndGet()
+    scratchHook
     val shm = java.nio.file.Paths.get("/dev/shm")
     val dir =
       if (shmUsable)
         java.nio.file.Files.createTempDirectory(shm, prefix)
       else java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles()
-        if (cs != null) cs.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }))
+    liveScratch.add(dir)
     dir
+  }
+
+  /** Deletes a scratch dir now instead of at exit. */
+  private[graft] def dropScratch(dir: java.nio.file.Path): Unit = {
+    rmTree(dir.toFile)
+    liveScratch.remove(dir): Unit
   }
 }

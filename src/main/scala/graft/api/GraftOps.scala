@@ -296,11 +296,6 @@ object GraftOps {
           .cast("long").as("chunk_toks"))
       .orderBy("doc_id", "chunk_idx")
 
-  /** Scratch paths of materialized TF aggregates, per (applicationId,
-    * canonical-plan + data-identity SHA-256) — the arbitrary-DataFrame
-    * analogue of the named-corpus FitOnce fits. */
-  private val tfidfTfCache = new graft.FitOnce[(String, String), String]
-
   /** Stable data identity of every leaf relation in an analyzed plan,
     * or None when ANY leaf has no stable identity — in which case the
     * caller must fit fresh and never cache. A canonicalized plan
@@ -350,7 +345,7 @@ object GraftOps {
       k: Int): DataFrame = {
     // The TF table is the query's real intermediate artifact — a
     // production pipeline materializes it — so materialize it ONCE per
-    // (session, corpus) through the FitOnce scratch layer and derive
+    // (session, corpus) through the fit-once store and derive
     // BOTH consumers (the per-doc stream and the document-frequency
     // aggregate) from the one parquet artifact: the corpus is
     // tokenized exactly once STRUCTURALLY (r17 verdict #7). Earlier
@@ -378,12 +373,8 @@ object GraftOps {
         explode(split(col(textCol), " ")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    def materializeTf(): String = {
-      val p = graft.Tables.scratchDir("graft_tf_").resolve("tf").toString
-      tfPlan.write.parquet(p)
-      p
-    }
-    val tfPath = leafDataIdentity(df.queryExecution.analyzed) match {
+    // The key is the fit's scope, where named queries pass their corpus dir.
+    val tf = leafDataIdentity(df.queryExecution.analyzed) match {
       case Some(dataId) =>
         val planKey = java.security.MessageDigest.getInstance("SHA-256")
           .digest((s"tfidf|$idCol|$textCol|" +
@@ -391,10 +382,10 @@ object GraftOps {
             "|schema:" + df.schema.json + "|data:" + dataId)
             .getBytes("UTF-8"))
           .map("%02x".format(_)).mkString
-        tfidfTfCache((spark.sparkContext.applicationId, planKey))(materializeTf())
-      case None => materializeTf()
+        graft.FitOnce.checkpoint(spark, planKey, "GraftOps.tf", "graft_tf_", "tf")(tfPlan)
+      case None => graft.Tables.readCached(spark,
+        graft.FitOnce.inScratch("graft_tf_")(graft.FitOnce.parquet(_, "tf", tfPlan)))
     }
-    val tf = graft.Tables.readCached(spark, tfPath)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).as("_graft_n"))
     // Per-doc ranking through the one-pass heap operator instead of a

@@ -69,8 +69,7 @@ object Prepared {
   /** The memoized (or, for side-effecting builders, fresh) DataFrame
     * for a SURVEY §2 query key. Thread-safe; concurrent first callers
     * block on one fill (ConcurrentHashMap.compute holds the bin lock
-    * for the build, like FitOnce's computeIfAbsent). Builders must
-    * never call back into `df` — the FitOnce no-re-entry rule: a
+    * for the build). Builders must never call back into `df`: a
     * nested compute on this map can deadlock on a shared bin. Every
     * caller today is harness-level (Bench/Verify/probes). */
   def df(spark: SparkSession, sf: String, name: String): DataFrame = {

@@ -241,45 +241,29 @@ object Ann {
       .withColumn("ed", expr("transform(embedding, x -> cast(x as double))"))
       .select(col("vec_id"), col("embedding"), col("ed"))
 
-  /** Scratch-parquet path of the fitted assignment, per (session, sf,
-    * probes) — train-once / reuse semantics (r3 verdict, "what's
-    * missing" #1): the first caller fits the quantizer and MATERIALIZES
-    * the assignment (the superstep-checkpoint pattern of
+  /** The fitted centroid table (tiny), trained ONCE per (session, sf)
+    * — probe-1 and probe-2 assignments share it instead of each
+    * re-running the Lloyd rounds. */
+  private def trainedCentroids(spark: SparkSession, sf: String): DataFrame =
+    graft.FitOnce.checkpoint(spark, sf, "Ann.centroids", "graft_ivf_", "centroids")(
+      kmeansFit(vecFrame(spark, sf), kmeansK(spark, sf), KmeansIters))
+
+  /** The k-means-trained assignment at `top` probes per vector, per
+    * (session, sf, probes) — train-once / reuse semantics (r3 verdict,
+    * "what's missing" #1): the first caller fits the quantizer and
+    * MATERIALIZES the assignment (the superstep-checkpoint pattern of
     * [[Dedup.componentsOf]]); every later use — including the second
     * side of the pair self-join, which previously re-executed the whole
     * k-means train (r3: 6.8 s, 21% of the bench, for
     * llm_ann_ivf_probe alone) — is a plain file-scan leaf. This is also
     * the real-world shape: a fitted index assignment is persisted once
     * and queried many times. */
-  private val centroidCache = new graft.FitOnce[(String, String), String]
-  private val fitCache = new graft.FitOnce[(String, String, Int), String]
-
-  /** The fitted centroid table (tiny), trained ONCE per (session, sf)
-    * — probe-1 and probe-2 assignments share it instead of each
-    * re-running the Lloyd rounds. */
-  private def trainedCentroids(spark: SparkSession, sf: String): DataFrame = {
-    val path = centroidCache((spark.sparkContext.applicationId, sf)) {
-      val p = Tables.scratchDir("graft_ivf_").resolve("centroids").toString
-      kmeansFit(vecFrame(spark, sf), kmeansK(spark, sf), KmeansIters)
-        .write.parquet(p)
-      p
-    }
-    Tables.readCached(spark, path)
-  }
-
-  /** Shared k-means-trained assignment at `top` probes per vector. */
   private def trainedAssignment(spark: SparkSession, sf: String,
       top: Int): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val path = fitCache((spark.sparkContext.applicationId, sf, top)) {
-      val assigned = assign(vecFrame(spark, sf),
-          trainedCentroids(spark, sf), top)
-        .withColumn("nrm", sqrt(dot("embedding", "embedding")))
-      val p = Tables.scratchDir("graft_ivf_").resolve("assigned").toString
-      assigned.write.parquet(p)
-      p
-    }
-    Tables.readCached(spark, path)
+    graft.FitOnce.checkpoint(spark, sf, s"Ann.assigned.$top", "graft_ivf_", "assigned")(
+      assign(vecFrame(spark, sf), trainedCentroids(spark, sf), top)
+        .withColumn("nrm", sqrt(dot("embedding", "embedding"))))
   }
 
   /** Spread a cell-assignment frame across the cores BY CELL before a
@@ -508,12 +492,9 @@ object Ann {
 
   /** Fit-once checkpoint of (codebooks, codes), per (session, sf) —
     * the same persisted-index discipline as [[trainedAssignment]]. */
-  private val pqCache = new graft.FitOnce[(String, String), (String, String)]
-
   private def pqIndex(spark: SparkSession, sf: String): (DataFrame, DataFrame) = {
     graft.functions.VectorExprs.register(spark)
-    val (bp, cp) = pqCache((spark.sparkContext.applicationId, sf)) {
-      val dir = Tables.scratchDir("graft_pq_")
+    val (bp, cp) = graft.FitOnce.scratch(spark, sf, "Ann.pq", "graft_pq_") { dir =>
       val books = dir.resolve("books").toString
       val codes = dir.resolve("codes").toString
       val sub = pqFrame(spark, sf)

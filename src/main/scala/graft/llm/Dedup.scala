@@ -47,17 +47,9 @@ object Dedup {
     * document scans per lshJaccard (band side a, band side b, both
     * verify sides). With the leaf materialized each branch is a
     * 15 MB file scan. Scratch parquet, removed at JVM exit. */
-  private val sigCache = new graft.FitOnce[(String, String, String), String]
-
   private def sigTable(spark: SparkSession, sf: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    val path = sigCache((spark.sparkContext.applicationId, sf, kind)) {
-      val p = Tables.scratchDir("graft_sig_").resolve(kind).toString
-      build.write.parquet(p)
-      p
-    }
-    Tables.readCached(spark, path)
-  }
+      build: => DataFrame): DataFrame =
+    graft.FitOnce.checkpoint(spark, sf, s"Dedup.sig.$kind", "graft_sig_", kind)(build)
 
   /** Shared MinHash-LSH pipeline over hashed shingle sets (doc_id,
     * hs: array<long>): per-row band signatures, band-bucket candidate
@@ -382,7 +374,7 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Scratch-parquet path of the materialized near-dup pair list, per
+  /** The materialized near-dup pair list, checkpointed per
     * (session, sf) — the stage-output shape of a real dedup pipeline:
     * the LSH pass runs once and its pair list is persisted, then every
     * downstream consumer (component labeling, the keep/drop decision,
@@ -391,16 +383,11 @@ object Dedup {
     * out of the LSH verify join for free and are what the containment
     * profile keys on. llm_near_dedup itself stays an uncached full
     * computation — it IS the LSH benchmark entry. */
-  private val pairsCache = new graft.FitOnce[(String, String), String]
-
-  private def nearDupPairsPath(spark: SparkSession, sf: String): String =
-    pairsCache((spark.sparkContext.applicationId, sf)) {
+  private def nearDupPairs(spark: SparkSession, sf: String): DataFrame =
+    graft.FitOnce.checkpoint(spark, sf, "Dedup.pairs", "graft_pairs_", "pairs") {
       graft.functions.VectorExprs.register(spark)
-      val p = Tables.scratchDir("graft_pairs_").resolve("pairs").toString
       nearDedup(spark, sf)
         .select(col("x"), col("y"), col("c"), col("na"), col("nb"))
-        .write.parquet(p)
-      p
     }
 
   /** Converged component labels, checkpointed once per (session, sf,
@@ -416,28 +403,19 @@ object Dedup {
     * lineage the closure must checkpoint first (true) — the caller
     * knows its own lineage; inferring it from the kind tag would
     * silently couple the cache-key string to the materialization
-    * contract. */
-  private val compCache = new graft.FitOnce[(String, String, String), String]
-
+    * contract. The file scan loses the label frame's ordering;
+    * consumers that emit the labels directly re-assert the D1 orderBy. */
   private[graft] def componentsTable(spark: SparkSession, sf: String,
       kind: String, materializePairs: Boolean)(
-      pairs: => DataFrame): DataFrame = {
-    val p = compCache((spark.sparkContext.applicationId, sf, kind)) {
-      val path = Tables.scratchDir("graft_comp_").resolve(kind).toString
-      componentsOf(spark, pairs, materialize = materializePairs)
-        .write.parquet(path)
-      path
-    }
-    // The file scan loses the label frame's ordering; re-assert the D1
-    // orderBy for consumers that emit the labels directly.
-    Tables.readCached(spark, p)
-  }
+      pairs: => DataFrame): DataFrame =
+    graft.FitOnce.checkpoint(spark, sf, s"Dedup.components.$kind", "graft_comp_", kind)(
+      componentsOf(spark, pairs, materialize = materializePairs))
 
   /** Text near-dup components off the checkpoint (pairs are already a
     * file-scan leaf, so the closure never re-materializes them). */
   private def textComponents(spark: SparkSession, sf: String): DataFrame =
     componentsTable(spark, sf, "text", materializePairs = false)(
-      Tables.readCached(spark, nearDupPairsPath(spark, sf))
+      nearDupPairs(spark, sf)
         .select(col("x"), col("y")))
 
   def dedupComponents(spark: SparkSession, sf: String): DataFrame =
@@ -449,7 +427,7 @@ object Dedup {
     * into one component). Two keyed counts over the persisted pair
     * list; nothing touches the corpus. */
   def pairDegree(spark: SparkSession, sf: String): DataFrame = {
-    val pairs = Tables.readCached(spark, nearDupPairsPath(spark, sf))
+    val pairs = nearDupPairs(spark, sf)
     pairs.select(col("x").as("v"))
       .union(pairs.select(col("y").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("degree"))
@@ -478,7 +456,7 @@ object Dedup {
     * SQL. bench_ref.json was re-minted at the boundary, so the
     * per-query ref trigger is calibrated to the new shape. */
   def containment(spark: SparkSession, sf: String): DataFrame =
-    Tables.readCached(spark, nearDupPairsPath(spark, sf))
+    nearDupPairs(spark, sf)
       .select(col("x"), col("y"), col("c"), col("na"), col("nb"),
         (col("c") * lit(1.0) / col("na")).as("cont_x"),
         (col("c") * lit(1.0) / col("nb")).as("cont_y"),

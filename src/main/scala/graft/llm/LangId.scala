@@ -37,15 +37,12 @@ import org.apache.spark.sql.functions._
   */
 object LangId {
 
-  private val modelCache =
-    new graft.FitOnce[(String, String), Seq[(String, Seq[String])]]
-
   /** The fitted marker model (each language's top-20 tokens by
     * (count desc, token asc)), trained once per (session, sf) via the
     * public [[graft.api.GraftOps.langMarkersFit]]. */
   private def trainedModel(spark: SparkSession,
       sf: String): Seq[(String, Seq[String])] =
-    modelCache((spark.sparkContext.applicationId, sf)) {
+    graft.FitOnce(spark, sf, "LangId.model") {
       graft.api.GraftOps.langMarkersFit(
         Tables.documents(spark, sf), "lang", "text", topN = 20)
     }

@@ -45,22 +45,6 @@ object Gates {
     * size. */
   private[graft] val BroadcastByteCap = 256L << 20
 
-  /** Measured (rows, bytes) feeding the gate decisions, computed ONCE
-    * per (session, sf, tag) and memoized.
-    *
-    * CROSS-TAG RE-ENTRANCY HAZARD: all tags share this one map, and
-    * `ConcurrentHashMap.computeIfAbsent` forbids a mapping function
-    * from updating OTHER mappings of the same map. A fill here runs
-    * one Spark aggregation job over a frame the caller has ALREADY
-    * CONSTRUCTED — it must never construct another gated query (which
-    * would fill a second tag inside this map and can deadlock).
-    * Callers uphold this by building gated inputs fully before the
-    * gate measures them; nested gate fills only ever descend into
-    * OTHER FitOnce instances (checkpoints), never back into this one.
-    */
-  private val sizeCache =
-    new graft.FitOnce[(String, String, String), (Long, Long)]
-
   /** Per-row byte cost of the fixed-width part of the schema, using
     * Catalyst's own `defaultSize` per type; variable-width columns
     * (strings, binaries, arrays) contribute their measured bytes via
@@ -89,7 +73,7 @@ object Gates {
     * 2× headroom covers that). */
   private[graft] def measuredSize(spark: SparkSession, sf: String,
       tag: String)(df: => DataFrame): (Long, Long) =
-    sizeCache((spark.sparkContext.applicationId, sf, tag)) {
+    graft.FitOnce(spark, sf, s"Gates.$tag") {
       val d = df
       val varCols = d.schema.fields.flatMap(varWidth)
       val aggs = count(lit(1)).cast("long").as("rows") +:

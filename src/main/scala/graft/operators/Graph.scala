@@ -23,15 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Undirected co-purchase edges (x < y by part id), deduplicated and
-    * checkpointed to scratch parquet once per (session, sf) — the edge
-    * list has several lineage consumers (degrees, orientation, edge
-    * count in the census; the bidirectional list in every PageRank
-    * iteration); without the checkpoint each would re-run the
-    * within-order self-join (same fit-once discipline as the dedup
-    * pair list / IVF index). */
-  private val edgeCache = new graft.FitOnce[(String, String), String]
-
   /** Node-grain degree table (u, dg) of the bidirectional graph,
     * checkpointed to scratch parquet once per (session, sf). The
     * degree aggregation feeds PageRank's init + every iteration's
@@ -40,19 +31,12 @@ object Graph {
     * orientation + wedge census in [[graphTriangles]] (3 more
     * subtrees). One aggregation job at first use; afterwards every
     * consumer is a scan of a node-grain file. */
-  private val degCache = new graft.FitOnce[(String, String), String]
-
-  private[graft] def degrees(spark: SparkSession, sf: String): DataFrame = {
-    val p = degCache((spark.sparkContext.applicationId, sf)) {
-      val path = Tables.scratchDir("graft_deg_").resolve("deg").toString
+  private[graft] def degrees(spark: SparkSession, sf: String): DataFrame =
+    graft.FitOnce.checkpoint(spark, sf, "Graph.degrees", "graft_deg_", "deg") {
       val e0 = edges(spark, sf)
       e0.select(col("x").as("u")).unionAll(e0.select(col("y").as("u")))
         .groupBy("u").agg(count(lit(1)).as("dg"))
-        .write.parquet(path)
-      path
     }
-    Tables.readCached(spark, p)
-  }
 
   /** Distinct-node count of the co-purchase graph, computed ONCE per
     * (session, sf) and memoized. The count feeds only the
@@ -60,12 +44,8 @@ object Graph {
     * over the node-grain degree checkpoint (parquet footer counts —
     * no data scan), so even the first call is metadata-cheap once the
     * degree table exists. */
-  private val nodeCountCache = new graft.FitOnce[(String, String), Long]
-
   private def nodeCount(spark: SparkSession, sf: String): Long =
-    nodeCountCache((spark.sparkContext.applicationId, sf)) {
-      degrees(spark, sf).count()
-    }
+    graft.FitOnce(spark, sf, "Graph.nodeCount")(degrees(spark, sf).count())
 
   /** Bidirectional adjacency with the SOURCE node's degree attached
     * (u, v, dg) — the layout iterative propagation serves from,
@@ -96,13 +76,10 @@ object Graph {
     * SPARK_GRAFT_CPUS reads the same layout, and at 100 TB the count
     * grows with the graph exactly like an ingest-time lakehouse
     * layout. */
-  private val adjCache = new graft.FitOnce[(String, String), String]
-
   private[graft] def adjacency(spark: SparkSession, sf: String): DataFrame = {
-    val tbl = adjCache((spark.sparkContext.applicationId, sf)) {
+    val tbl = graft.FitOnce.scratch(spark, sf, "Graph.adjacency", "graft_adj_") { dir =>
       val tag = sf.replaceAll("[^a-zA-Z0-9]", "_")
       val name = s"graft_bkt_adj_$tag"
-      val dir = Tables.scratchDir("graft_adj_")
       val e0 = edges(spark, sf)
       // Footer-only rowcount of the edge checkpoint (no data scan).
       val adjRows = 2L * e0.count()
@@ -123,21 +100,23 @@ object Graph {
     spark.table(tbl)
   }
 
-  private def edges(spark: SparkSession, sf: String): DataFrame = {
-    val p = edgeCache((spark.sparkContext.applicationId, sf)) {
-        val path = Tables.scratchDir("graft_edges_").resolve("edges").toString
-        val li = Tables.lineitem(spark, sf)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        li.as("a").join(li.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .select(col("a.pk").as("x"), col("b.pk").as("y"))
-          .distinct()
-          .write.parquet(path)
-        path
-      }
-    Tables.readCached(spark, p)
-  }
+  /** Undirected co-purchase edges (x < y by part id), deduplicated and
+    * checkpointed to scratch parquet once per (session, sf) — the edge
+    * list has several lineage consumers (degrees, orientation, edge
+    * count in the census; the bidirectional list in every PageRank
+    * iteration); without the checkpoint each would re-run the
+    * within-order self-join (same fit-once discipline as the dedup
+    * pair list / IVF index). */
+  private def edges(spark: SparkSession, sf: String): DataFrame =
+    graft.FitOnce.checkpoint(spark, sf, "Graph.edges", "graft_edges_", "edges") {
+      val li = Tables.lineitem(spark, sf)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .distinct()
+      li.as("a").join(li.as("b"),
+          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+        .select(col("a.pk").as("x"), col("b.pk").as("y"))
+        .distinct()
+    }
 
   /** Global triangle census: edge / wedge / triangle counts plus the
     * global clustering coefficient 3·T/W, combined from exact integers

@@ -67,14 +67,6 @@ object Joins {
   def join5WayQ5(spark: SparkSession, sf: String): DataFrame =
     join5WayQ5Plan(spark, sf, SortSet.BroadcastDimCap)
 
-  /** The orders⨝customer Q5 dim (o_orderkey, c_nationkey),
-    * checkpointed to scratch parquet once per (session, sf) — same
-    * fit-once discipline (and same rationale) as [[SortSet.q3Dim]]:
-    * the subtree is a pure function of (session, sf), rebuilt on
-    * every invocation otherwise. Built with the default gate — the
-    * cap changes plan shape, never rows. */
-  private val q5DimCache = new graft.FitOnce[(String, String), String]
-
   /** The dim BUILD's join plan (pre-checkpoint), parameterized on the
     * broadcast gate — same PlanSuite-visibility rationale as
     * [[SortSet.q3DimPlan]]: timed runs only scan the checkpoint, so the
@@ -106,14 +98,15 @@ object Joins {
       .select(col("o_orderkey"), col("c_nationkey"))
   }
 
-  private def q5Dim(spark: SparkSession, sf: String): DataFrame = {
-    val p = q5DimCache((spark.sparkContext.applicationId, sf)) {
-      val path = Tables.scratchDir("graft_q5dim_").resolve("dim").toString
-      q5DimPlan(spark, sf, SortSet.BroadcastDimCap).write.parquet(path)
-      path
-    }
-    Tables.readCached(spark, p)
-  }
+  /** The orders⨝customer Q5 dim (o_orderkey, c_nationkey),
+    * checkpointed to scratch parquet once per (session, sf) — same
+    * fit-once discipline (and same rationale) as [[SortSet.q3Dim]]:
+    * the subtree is a pure function of (session, sf), rebuilt on
+    * every invocation otherwise. Built with the default gate — the
+    * cap changes plan shape, never rows. */
+  private def q5Dim(spark: SparkSession, sf: String): DataFrame =
+    graft.FitOnce.checkpoint(spark, sf, "Joins.q5dim", "graft_q5dim_", "dim")(
+      q5DimPlan(spark, sf, SortSet.BroadcastDimCap))
 
   /** The join fold, parameterized on the broadcast gate so PlanSuite
     * can pin the plan on BOTH sides of the threshold. */
@@ -332,14 +325,10 @@ object Joins {
     * join sides written bucketed by the join key into session scratch
     * (external-table path, in-memory catalog) — the write-once cost a
     * lakehouse pays at ingest so every later join is co-located. */
-  private val bucketCache =
-    new graft.FitOnce[(String, String), (String, String)]
-
   private def bucketedTables(spark: SparkSession, sf: String): (String, String) =
-    bucketCache((spark.sparkContext.applicationId, sf)) {
+    graft.FitOnce.scratch(spark, sf, "Joins.bucketed", "graft_bkt_") { dir =>
       val tag = sf.replaceAll("[^a-zA-Z0-9]", "_")
       val (li, ord) = (s"graft_bkt_li_$tag", s"graft_bkt_ord_$tag")
-      val dir = Tables.scratchDir("graft_bkt_")
       Tables.lineitem(spark, sf)
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
         .write.mode("overwrite")
@@ -486,11 +475,9 @@ object Joins {
       .orderBy("n_name")
   }
 
-  private val dppCache = new graft.FitOnce[(String, String), String]
-
   private def dppSupplierDir(spark: SparkSession, sf: String): String =
-    dppCache((spark.sparkContext.applicationId, sf)) {
-      val path = Tables.scratchDir("graft_dpp_").resolve("supplier").toString
+    graft.FitOnce.scratch(spark, sf, "Joins.dpp", "graft_dpp_") { dir =>
+      val path = dir.resolve("supplier").toString
       graft.sources.Sinks.writePartitioned(
         Tables.supplier(spark, sf)
           .select(col("s_suppkey"), col("s_acctbal"), col("s_nationkey")),

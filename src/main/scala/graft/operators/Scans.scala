@@ -14,26 +14,18 @@ import org.apache.spark.sql.functions._
   */
 object Scans {
 
-  /** Fragmented-input layout for [[scanCompact]], one per
-    * (session, sf) — the compaction demo's given lake state. */
-  private val fragCache = new graft.FitOnce[(String, String), String]
-
-  /** Input layouts for the read-semantics scan operators (corrupt
-    * drop, evolved generations, partitioned table), one per
-    * (session, sf). These queries' OPERATOR is the read behavior —
-    * quarantine-and-count, merged-schema scan, partition-pruned scan —
-    * against lake state that in production exists long before the
-    * query runs (a table is partitioned once and queried forever;
-    * history generations are never rewritten). Building that state is
-    * layout prep, the same fit-once class as the upsert source
-    * re-layout; the scored read runs in full every invocation. The
-    * ROUND-TRIP queries (csv/jsonl/text/orc) keep their per-call
-    * writes — there the write is half the declared semantics. */
-  private val corruptCache = new graft.FitOnce[(String, String), String]
-  private val evoCache = new graft.FitOnce[(String, String),
-    (String, org.apache.spark.sql.types.StructType)]
-  private val partCache = new graft.FitOnce[(String, String),
-    (String, org.apache.spark.sql.types.StructType)]
+  /* The cache note: input layouts for the read-semantics scan
+   * operators (corrupt drop, evolved generations, partitioned table,
+   * and the compaction demo's fragmented input) are fit-once, one per
+   * (session, sf). These queries' OPERATOR is the read behavior —
+   * quarantine-and-count, merged-schema scan, partition-pruned scan —
+   * against lake state that in production exists long before the
+   * query runs (a table is partitioned once and queried forever;
+   * history generations are never rewritten). Building that state is
+   * layout prep, the same fit-once class as the upsert source
+   * re-layout; the scored read runs in full every invocation. The
+   * ROUND-TRIP queries (csv/jsonl/text/orc) keep their per-call
+   * writes — there the write is half the declared semantics. */
 
   /** Column-pruned scan with a stable total order (D1). */
   def scanProject(spark: SparkSession, sf: String): DataFrame =
@@ -165,8 +157,8 @@ object Scans {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     // The damaged drop is the ingest's INPUT (fit-once layout; see the
     // cache note above) — the scored operator is the PERMISSIVE read.
-    val path = corruptCache((spark.sparkContext.applicationId, sf)) {
-      val p = Tables.scratchDir("graft_corrupt_").resolve("drop").toString
+    val path = graft.FitOnce.scratch(spark, sf, "Scans.corrupt", "graft_corrupt_") { dir =>
+      val p = dir.resolve("drop").toString
       Tables.documents(spark, sf)
         .select(to_json(struct(col("doc_id"), col("lang"), col("n_chars"))).as("value"))
         .write.text(p)
@@ -199,8 +191,9 @@ object Scans {
     // The Hive-partitioned table is standing lake state (fit-once
     // layout; see the cache note above) — the scored operator is the
     // partition-pruned read.
-    val (path, schema) = partCache((spark.sparkContext.applicationId, sf)) {
-      val p = Tables.scratchDir("graft_part_").resolve("docs").toString
+    val (path, schema) = graft.FitOnce.scratch(spark, sf, "Scans.partitioned",
+        "graft_part_") { dir =>
+      val p = dir.resolve("docs").toString
       graft.sources.Sinks.writePartitioned(
         Tables.documents(spark, sf), p, Seq("lang"))
       // Infer once (data + partition columns) and keep the schema with
@@ -233,8 +226,8 @@ object Scans {
     // source re-layout. The compaction itself (read small files →
     // shuffle rewrite → fresh comp dir + stats) runs in full on every
     // invocation; the query stays declared side-effecting.
-    val frag = fragCache((spark.sparkContext.applicationId, sf)) {
-      val p = Tables.scratchDir("graft_compact_").resolve("frag").toString
+    val frag = graft.FitOnce.scratch(spark, sf, "Scans.fragmented", "graft_compact_") { dir =>
+      val p = dir.resolve("frag").toString
       Tables.documents(spark, sf).repartition(64).write.parquet(p)
       p
     }
@@ -303,9 +296,8 @@ object Scans {
     // The two generations are the lake's accumulated HISTORY (fit-once
     // layout; see the cache note above) — the scored operator is the
     // mergeSchema read across them.
-    val (dir, merged) = evoCache((spark.sparkContext.applicationId, sf)) {
+    val (dir, merged) = graft.FitOnce.scratch(spark, sf, "Scans.evolved", "graft_evo_") { p =>
       val d = Tables.part(spark, sf)
-      val p = Tables.scratchDir("graft_evo_")
       d.filter(col("p_partkey") % 2 === 0)
         .select("p_partkey", "p_name", "p_brand")
         .write.parquet(p.resolve("gen1").toString)

@@ -31,19 +31,6 @@ object SortSet {
     * shuffled bytes fit. Same rationale as [[Graph.BroadcastNodeCap]]. */
   private[graft] val BroadcastDimCap = Gates.BroadcastByteCap
 
-  /** The doubly-filtered orders⨝customer Q3 dim (o_orderkey,
-    * o_orderdate), checkpointed to scratch parquet once per
-    * (session, sf) — the same fit-once discipline as the graph edge /
-    * degree tables. Both topk queries (and both timed passes of each
-    * in a bench sweep) share the subtree; without the checkpoint every
-    * invocation re-ran the customer filter + join (r8 judge: the gated
-    * fact-stream shape costs +0.26 s per run over r7, most of it this
-    * rebuild). The checkpoint content is gate-independent — the cap
-    * only ever changes plan SHAPE (hint or not), never rows — so the
-    * build always uses the default cap and parameterized callers gate
-    * only the read-back. */
-  private val q3DimCache = new graft.FitOnce[(String, String), String]
-
   /** The dim BUILD's join plan (pre-checkpoint), parameterized on the
     * broadcast gate so PlanSuite can pin the `q3_cust` gate on both
     * sides of the threshold even though the checkpointed build below
@@ -63,14 +50,20 @@ object SortSet {
       .select(col("o_orderkey"), col("o_orderdate"))
   }
 
-  private def q3Dim(spark: SparkSession, sf: String): DataFrame = {
-    val p = q3DimCache((spark.sparkContext.applicationId, sf)) {
-      val path = Tables.scratchDir("graft_q3dim_").resolve("dim").toString
-      q3DimPlan(spark, sf, BroadcastDimCap).write.parquet(path)
-      path
-    }
-    Tables.readCached(spark, p)
-  }
+  /** The doubly-filtered orders⨝customer Q3 dim (o_orderkey,
+    * o_orderdate), checkpointed to scratch parquet once per
+    * (session, sf) — the same fit-once discipline as the graph edge /
+    * degree tables. Both topk queries (and both timed passes of each
+    * in a bench sweep) share the subtree; without the checkpoint every
+    * invocation re-ran the customer filter + join (r8 judge: the gated
+    * fact-stream shape costs +0.26 s per run over r7, most of it this
+    * rebuild). The checkpoint content is gate-independent — the cap
+    * only ever changes plan SHAPE (hint or not), never rows — so the
+    * build always uses the default cap and parameterized callers gate
+    * only the read-back. */
+  private def q3Dim(spark: SparkSession, sf: String): DataFrame =
+    graft.FitOnce.checkpoint(spark, sf, "SortSet.q3dim", "graft_q3dim_", "dim")(
+      q3DimPlan(spark, sf, BroadcastDimCap))
 
   /** Shared Q3-style revenue aggregate (ordering applied by callers).
     *

@@ -202,7 +202,6 @@ object Windows {
     * quantile range — the documented "≤1/10,000" contract in README
     * §Design and the X100 gate's exclusion note. Suite-pinned. */
   private[graft] val RfmPercentileAccuracy = 10000
-  private val rfmBigGate = new graft.FitOnce[(String, String), Boolean]
 
   /** RFM customer segmentation: recency (days since last order,
     * relative to the corpus max date), frequency (order count) and
@@ -221,7 +220,7 @@ object Windows {
     * range-partitioned sort). Max date is a 1-row broadcast (no
     * driver round-trip). */
   def winRfmSegment(spark: SparkSession, sf: String): DataFrame = {
-    val big = rfmBigGate((spark.sparkContext.applicationId, sf)) {
+    val big = graft.FitOnce(spark, sf, "Windows.rfmBig") {
       Tables.orders(spark, sf).count() > RfmNtileMaxOrders
     }
     winRfmSegmentAt(spark, sf, big)

@@ -21,7 +21,10 @@ import java.util.concurrent.atomic.AtomicInteger
   *  - session multiplexing: two SparkSessions over one context racing
   *    the fit-backed query families (ANN, dedup, graph, bucketed join)
   *    re-fit NOTHING once warm (scratch-allocation counter is flat) and
-  *    match their serial results row for row.
+  *    match their serial results row for row;
+  *  - nesting and failure: a fill may fill other keys of the same
+  *    store, re-entering its own key throws, and a failed scratch fill
+  *    leaves neither its directory nor an entry behind.
   */
 class FitOnceSuite extends SparkTestBase {
 
@@ -127,6 +130,72 @@ class FitOnceSuite extends SparkTestBase {
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p1)),
         "test setup: fit1's scratch should be gone")
     } finally pool.shutdown()
+  }
+
+  test("a nested chain of 24 keys on one instance fills each key exactly once") {
+    // Every fill fills the next key down the chain on the SAME
+    // instance, as the q3/q5 dim fill measures its gate and the IVF
+    // assignment trains its centroids in the one store. A fill run
+    // inside ConcurrentHashMap.computeIfAbsent fails this with
+    // "Recursive update".
+    val fo = new FitOnce[String, Int]
+    val fills = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
+    def fit(i: Int): Int = fo(s"k$i") {
+      fills.computeIfAbsent(s"k$i", _ => new AtomicInteger).incrementAndGet()
+      if (i == 0) 0 else fit(i - 1) + 1
+    }
+    assert(fit(23) == 23)
+    assert(fit(23) == 23 && fit(11) == 11, "a filled key was not served")
+    assert((0 to 23).map(i => fills.get(s"k$i").get) == Seq.fill(24)(1),
+      s"fill counts per key: $fills")
+  }
+
+  test("a failed scratch fill leaves no directory and no entry; the next call refits") {
+    val scope = s"fitonce-suite-${System.nanoTime}"
+    val df = spark.range(10).toDF("id")
+    val fills = new AtomicInteger(0)
+    var dirs = Seq.empty[java.nio.file.Path]
+    def fit(fail: Boolean): String =
+      FitOnce.scratch(spark, scope, "FitOnceSuite.out", "graft_fitonce_t_") { d =>
+        fills.incrementAndGet()
+        dirs :+= d
+        val p = d.resolve("out").toString
+        df.write.parquet(p)
+        if (fail) throw new IllegalStateException("injected fill failure")
+        p
+      }
+    val e = intercept[IllegalStateException](fit(fail = true))
+    assert(e.getMessage == "injected fill failure")
+    assert(dirs.size == 1 && !java.nio.file.Files.exists(dirs.head),
+      s"the failed fill left ${dirs.head} on disk")
+    val p = fit(fail = false)
+    assert(fills.get == 2, "the failed fill left an entry: the next call did not refit")
+    assert(spark.read.parquet(p).count() == 10)
+    assert(fit(fail = true) == p && fills.get == 2, "the refit was not served")
+  }
+
+  test("a fill that re-enters its own key throws instead of hanging") {
+    val fo = new FitOnce[String, Int]
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val f = pool.submit(new Callable[Int] {
+        def call(): Int = fo("self")(fo("self")(1) + 1)
+      })
+      val e = intercept[java.util.concurrent.ExecutionException](
+        f.get(30, TimeUnit.SECONDS))
+      assert(e.getCause.isInstanceOf[IllegalStateException], s"threw ${e.getCause}")
+      assert(fo("self")(7) == 7, "the failed re-entrant fill left an entry")
+    } finally pool.shutdownNow()
+  }
+
+  test("scratch dirs share one shutdown hook") {
+    val f = Class.forName("java.lang.ApplicationShutdownHooks").getDeclaredField("hooks")
+    f.setAccessible(true)
+    def hooks: Int = f.get(null).asInstanceOf[java.util.Map[_, _]].size
+    Tables.dropScratch(Tables.scratchDir("graft_fitonce_t_"))
+    val before = hooks
+    (1 to 3).foreach(_ => Tables.dropScratch(Tables.scratchDir("graft_fitonce_t_")))
+    assert(hooks == before, s"shutdown hooks grew from $before to $hooks")
   }
 
   test("two sessions racing the fit-backed families re-fit nothing once warm") {
