@@ -360,14 +360,9 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE stays ON by default (the at-scale behavior: runtime skew
-      // split / partition coalescing); the env knob exists to measure
-      // its fixed re-planning cost at micro-bench scale.
-      // Normalized to a strict boolean: a stray value like "1" would
-      // otherwise throw on first conf read and abort the timed run.
-      .config("spark.sql.adaptive.enabled",
-        String.valueOf(!Set("false", "0", "off")
-          .contains(sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toLowerCase)))
+      // AQE stays ON (the at-scale behavior: runtime skew split /
+      // partition coalescing).
+      .config("spark.sql.adaptive.enabled", "true")
       // Size the generated-class cache to the workload (static conf,
       // default 100 entries): a 167-query sweep cycles far more than
       // 100 generated classes, so by the time a query's SECOND timed
@@ -376,14 +371,14 @@ object Bench {
       // ~9 jobs per run — read 2.4–2.8 s inside every full sweep vs
       // 1.3–1.6 s isolated for two rounds straight; with the cache
       // sized to the sweep the in-sweep number IS the isolated number
-      // (InterferenceProbe: before 1.97/1.70/1.50 s, after-166-queries
+      // (r11 A/B: before 1.97/1.70/1.50 s, after-166-queries
       // 1.44/1.25/1.31 s at 5000 entries vs 2.66 s first-run-after at
       // the default). Same knob a long-lived production session serving
       // a wide query mix would set.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       // AQE's partition-coalescing floor stays at the 1m DEFAULT — a
       // deliberate, measured decision, not an oversight. A five-sweep
-      // A/B (r12, CoalesceFloorProbe + full-inventory runs at 1m /
+      // A/B (r12, an isolated floor probe + full-inventory runs at 1m /
       // 256kb / 128kb / 64kb) showed lowering the floor re-parallelizes
       // small-shuffle queries (total 35.0 -> 32.2-33.5 s) but taxes
       // every ITERATIVE plan with per-iteration task-launch overhead
@@ -392,10 +387,8 @@ object Bench {
       // query whose gap was structural (llm_ann_ivf_probe: pair-cost
       // quadratic in cell size, input bytes linear, so byte-based
       // coalescing serialized ~800 k dot products onto one core) is
-      // fixed where it belongs, in the operator (Ann.spreadByCell);
-      // the env knob re-prices the floor without a rebuild.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_FLOOR", "1m"))
+      // fixed where it belongs, in the operator (Ann.spreadByCell).
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       // Shuffle scratch on the job-scoped fast tier (/dev/shm when
       // writable — same policy, and same cleanup hook, as
       // Tables.scratchDir): the ×100 crossover profile showed tiny
@@ -406,11 +399,10 @@ object Bench {
       // SSD for exactly this reason; durable outputs never live here.
       .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
         graft.Tables.scratchDir("graft_shuffle_").toString))
-      // Shuffle writer choice for the 32-partition exchanges (A/B
-      // knob; see NOTES r14): bypass writes numPartitions files per
-      // map task, sort writes one data+index pair.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESH", "200"))
+      // Shuffle writer choice for the 32-partition exchanges (Spark's
+      // default, kept after the r14 A/B; see NOTES r14): bypass writes
+      // numPartitions files per map task, sort writes one data+index pair.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "200")
       // Same session TZ as Verify: timestamp-literal filters must
       // select the same rows here as in the scored correctness run,
       // or a non-UTC box would time different work.
@@ -504,7 +496,7 @@ object Bench {
     // DataFrame is built once per query (the warm pass pays it) and
     // each timed `.count()` constructs a fresh QueryExecution over the
     // already-analyzed plan — full job re-runs every time (fresh
-    // shuffle ids; PreparedProbe pins equal task counts), only the
+    // shuffle ids; the r13 A/B measured equal task counts), only the
     // builder + per-Dataset analysis cost is skipped. This is the
     // prepared-statement protocol a serving engine uses, and the
     // protocol DuckDB's ~1 ms planner makes BASELINE.md's warm repeats
@@ -703,48 +695,16 @@ object Bench {
     // budget can rescue individual queries, but a sustained steal
     // burst contaminates the whole sweep and the artifact used to
     // carry the burst number with no recourse. Both attempts ride the
-    // artifact ("sweep_attempts"); the env knob exists so a doctored
-    // validation run can pin the single-attempt path.
-    // JIT-settle before the first timed pass (r19 verdict #7
-    // experiment): warmPin runs every plan once, but HotSpot's C2
-    // queue drains ASYNCHRONOUSLY — the hypothesis was that the first
-    // timed pass runs against a compile backlog (NOTES r19: in-sweep
-    // pagerank 2-3 s vs 1.2-1.6 s isolated). MEASURED A/B (r20,
-    // adjacent scored-style sweeps at sf0.1): the drain found the
-    // queue ALREADY QUIET — jit_settle_s read 1.001 s, i.e. one poll
-    // interval — so there is no post-warmup backlog to drain (the
-    // calib kernels alone give C2 ~10 s of runway after warmPin);
-    // the in-sweep recompile draws must be LAZY tier-up during the
-    // sweep itself, which a pre-sweep wait cannot touch. Totals
-    // (settle-on 27.98 s/12 retimes vs off 26.01 s/3) differ by box
-    // drift, not the 1 s wait. NOT adopted: default OFF, knob +
-    // "jit_settle_s" artifact key remain for re-runs.
-    // Poll rule when enabled: CompilationMXBean cumulative compile
-    // time quiet (<50 ms progress over 1 s), capped at 60 s.
-    val jitSettleS: Double =
-      if (!Set("true", "1", "on").contains(
-          sys.env.getOrElse("SPARK_GRAFT_JIT_SETTLE", "false").toLowerCase)) -1.0
-      else {
-        val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-        if (jit == null || !jit.isCompilationTimeMonitoringSupported) -1.0
-        else {
-          val t0 = System.nanoTime()
-          var last = jit.getTotalCompilationTime
-          var quiet = false
-          while (!quiet && (System.nanoTime() - t0) < 60e9) {
-            Thread.sleep(1000)
-            val now = jit.getTotalCompilationTime
-            quiet = now - last < 50
-            last = now
-          }
-          (System.nanoTime() - t0) / 1e9
-        }
-      }
+    // artifact ("sweep_attempts").
+    // No JIT-settle wait before the first timed pass: the r20 A/B
+    // (adjacent scored-style sweeps at sf0.1) found HotSpot's C2 queue
+    // already quiet one 1 s poll after warmPin — the in-sweep recompile
+    // draws are lazy tier-up during the sweep, which a pre-sweep wait
+    // cannot touch (settle-on 27.98 s/12 retimes vs off 26.01 s/3,
+    // box drift, not the wait).
     val attempt1 = timedSweep()
-    val retryOn = !Set("false", "0", "off").contains(
-      sys.env.getOrElse("SPARK_GRAFT_SWEEP_RETRY", "true").toLowerCase)
     val attempt2 =
-      if (attempt1.contaminated && retryOn) { awaitQuiet(); Some(timedSweep()) }
+      if (attempt1.contaminated) { awaitQuiet(); Some(timedSweep()) }
       else None
     def summ(a: Attempt) = SweepSummary(
       a.results.values.filter(_ >= 0).sum, a.contaminated, a.stealDelta,
@@ -872,7 +832,6 @@ object Bench {
       s""""calib_ref":${calibRef.map(fmt3).getOrElse("null")},""" +
       s""""calib_mem_s":${fmt3(calibMem)},""" +
       s""""calib_mem_ref":${calibMemRef.map(fmt3).getOrElse("null")},""" +
-      s""""jit_settle_s":${fmt3(jitSettleS)},""" +
       s""""ref_cpus":${refCpus.getOrElse("null")},""" +
       s""""prepared_pinned":${warmPin.size},""" +
       s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +

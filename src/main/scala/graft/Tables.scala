@@ -33,7 +33,7 @@ object Tables {
   // PreparedSuite repeat-build-silence pin flagged on ~40 queries.)
   private val cache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String),
+      scala.collection.concurrent.TrieMap[String,
         (StructType, java.lang.ref.WeakReference[DataFrame])]]())
 
   private def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
@@ -41,46 +41,27 @@ object Tables {
     // carry the same physical type the DuckDB oracle produces.
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     graft.plans.PlannerExtensions.install(spark)
-    val perSession = cache.computeIfAbsent(spark,
-      _ => scala.collection.concurrent.TrieMap.empty)
-    val key = (sfDir, name)
-    perSession.get(key) match {
-      case Some((schema, ref)) =>
-        Option(ref.get).getOrElse {
-          val df = spark.read.schema(schema).parquet(s"$sfDir/$name.parquet")
-          perSession.update(key, (schema, new java.lang.ref.WeakReference(df)))
-          df
-        }
-      case None =>
-        val df = spark.read.parquet(s"$sfDir/$name.parquet")
-        perSession.update(key, (df.schema, new java.lang.ref.WeakReference(df)))
-        df
-    }
+    readCached(spark, s"$sfDir/$name.parquet")
   }
 
-  /** Cached parquet scan of an arbitrary path — for fit-once checkpoint
-    * READ-BACKS (dim tables, signature tables, IVF fits): the path is
-    * written once per (session, sf), but a bare `spark.read.parquet`
-    * at the read site re-infers the schema on every build, and on a
-    * multi-part checkpoint dir that is a footer-reading Spark job per
-    * invocation — a fixed per-build cost the prepared path hides and a
-    * fresh-build caller pays for nothing. Same session-weak /
-    * schema-strong discipline as [[load]]. */
+  /** Cached parquet scan of a path, keyed on the path: the corpus
+    * tables ([[load]]) and the fit-once checkpoint READ-BACKS (dim
+    * tables, signature tables, IVF fits) share one lookup. A bare
+    * `spark.read.parquet` re-infers the schema on every build, and
+    * that is a footer-reading Spark job per invocation — a fixed
+    * per-build cost the prepared path hides and a fresh-build caller
+    * pays for nothing. */
   private[graft] def readCached(spark: SparkSession, path: String): DataFrame = {
     val perSession = cache.computeIfAbsent(spark,
       _ => scala.collection.concurrent.TrieMap.empty)
-    val key = (path, "#path")
-    def reread(schema: StructType): DataFrame = {
-      val df = spark.read.schema(schema).parquet(path)
-      perSession.update(key, (schema, new java.lang.ref.WeakReference(df)))
+    def scan(schema: Option[StructType]): DataFrame = {
+      val df = schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+      perSession.update(path, (df.schema, new java.lang.ref.WeakReference(df)))
       df
     }
-    perSession.get(key) match {
-      case Some((schema, ref)) => Option(ref.get).getOrElse(reread(schema))
-      case None =>
-        val df = spark.read.parquet(path)
-        perSession.update(key, (df.schema, new java.lang.ref.WeakReference(df)))
-        df
+    perSession.get(path) match {
+      case Some((schema, ref)) => Option(ref.get).getOrElse(scan(Some(schema)))
+      case None => scan(None)
     }
   }
 

@@ -5,14 +5,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Prepared-statement surface: memoize the BUILT DataFrame per
   * (session, sf, query) so repeat invocations skip the builder and its
   * eager per-Dataset analysis — the per-invocation fixed cost
-  * ProfileSplit measured at 0.02–0.22 s on the sub-second shapes
+  * the r12 A/B measured at 0.02–0.22 s on the sub-second shapes
   * (NOTES, r12). This is the shape a serving engine uses: plan once,
   * execute many.
   *
   * What reuse does and does NOT skip: a later action on the memoized
   * Dataset (e.g. `.count()`) constructs a NEW QueryExecution over the
   * already-analyzed plan — fresh RDDs and fresh shuffle ids — so the
-  * query's jobs re-run in full every time (PreparedProbe pins equal
+  * query's jobs re-run in full every time (the r13 A/B measured equal
   * task counts fresh-vs-memoized); only the builder + analysis work is
   * saved. Never call actions on a QueryExecution cached across runs —
   * same RDD lineage would let the scheduler skip completed shuffle map

@@ -272,8 +272,8 @@ object Ann {
     * linear, so AQE's byte-based partition coalescing structurally
     * under-sizes it: at sf0.1 the 4 000 assignment rows coalesce to
     * ONE partition and ~800 k float-dot evaluations run on a single
-    * core (1.17 s in-sweep; 0.30 s once spread — CoalesceFloorProbe
-    * r12 traced the gap to the coalescing floor). An explicit hash
+    * core (1.17 s in-sweep; 0.30 s once spread — the r12 A/B traced
+    * the gap to the coalescing floor). An explicit hash
     * repartition on `cell` declares the stage's real parallelism
     * need; both self-join sides inherit it, so the join adds no
     * further exchange. At scale the same layout is what the equi-join

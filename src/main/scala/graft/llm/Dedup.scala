@@ -127,7 +127,7 @@ object Dedup {
     // six times per document per invocation. The slot table is the
     // same (doc_id, hs, sl) ingest-time artifact minhashEst already
     // shares — one sigTable fewer, and the hot path pays only the
-    // cheap fold. Measured: TimeOne (fresh-plan protocol, sf0.1) min
+    // cheap fold. Measured (r17 A/B, fresh-plan protocol, sf0.1): min
     // 0.754 → 0.507 s; full-sweep A/B at equal box calib (0.462 both
     // sides) 0.41 → 0.20 s in-sweep with zero inventory regressions.
     lshJaccard(word3Slots(spark, sf), 0.9,
@@ -205,7 +205,7 @@ object Dedup {
     // order is strict) — collect_list would put the whole explode
     // through ObjectHashAggregate, which falls back to sort-based
     // aggregation at 128 groups per partition (13k gram groups here).
-    // Measured (StageTimeProbe, sf0.1): the codegen'd aggregate runs
+    // Measured (r21 per-stage A/B, sf0.1): the codegen'd aggregate runs
     // the whole 1.35M-long explode in ~0.16 s on the sigTable's single
     // split — a repartition(32) A/B spread it across tasks but paid
     // ~0.14 s of fixed per-task cost each (4.7 CPU-s for 0.2 s of

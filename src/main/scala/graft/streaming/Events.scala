@@ -67,7 +67,7 @@ object Events {
     * and aggregate on a LONG window-start key, converting to timestamp
     * once per OUTPUT row — rather than `window(ts2, …)`'s Expand over a
     * struct-of-timestamps key (the ev_tumbling per-row-conversion
-    * discipline, r14; SlidingProbe A/B: 0.187→0.152 s at sf0.1,
+    * discipline, r14; r15 A/B: 0.187→0.152 s at sf0.1,
     * 0.196→0.168 s at ×10, arms asserted row-identical on both corpora
     * before timing). `div` floor semantics are exact here: corpus
     * timestamps are post-epoch. */

@@ -59,8 +59,8 @@ object StreamDemo {
     * the first run of a given checkpoint, so a cluster deployment
     * with real state volume sets spark.sql.shuffle.partitions to
     * match before starting — the same sizing exercise, different
-    * value; GRAFT_STATE_PARTS overrides for re-running the sweep. */
-  private val StateParts = sys.env.getOrElse("GRAFT_STATE_PARTS", "4")
+    * value. */
+  private val StateParts = "4"
 
   private def withStateParts[T](spark: SparkSession)(f: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")

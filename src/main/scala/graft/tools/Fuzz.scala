@@ -366,7 +366,7 @@ object Fuzz {
       // Emit the committed suite goldens: seed → caseHash, first n seeds.
       val path = args(1)
       val n = args.lift(2).map(_.toInt).getOrElse(48)
-      val dir = java.nio.file.Files.createTempDirectory("graft_fuzz_golden_").toString
+      val dir = graft.Tables.scratchDir("graft_fuzz_golden_").toString
       val entries = (0 until n).map { s =>
         val (name, df, _) = genCase(spark, dir, s)
         s"""  ${jsonEsc(name)}: ${jsonEsc(caseHash(df))}"""

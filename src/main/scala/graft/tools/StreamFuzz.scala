@@ -106,9 +106,9 @@ object StreamFuzz {
     val done = java.nio.file.Paths.get(src, "_GRAFT_DONE")
     if (!java.nio.file.Files.exists(done)) {
       new java.io.File(src).mkdirs()
-      val staging = java.nio.file.Files
-        .createTempDirectory("graft_sfz_stage_").toString
-      rowsPerBatch.zipWithIndex.foreach { case (rows, i) =>
+      val stagingDir = graft.Tables.scratchDir("graft_sfz_stage_")
+      val staging = stagingDir.toString
+      try rowsPerBatch.zipWithIndex.foreach { case (rows, i) =>
         val stage = s"$staging/b$i"
         spark.createDataFrame(
             java.util.Arrays.asList(rows: _*), srcSchema)
@@ -127,7 +127,7 @@ object StreamFuzz {
         // per-batch watermark oracle.
         require(dst.setLastModified(1700000000000L + i * 60000L),
           s"setLastModified rejected on $dst — batch-order mtimes unusable")
-      }
+      } finally graft.Tables.dropScratch(stagingDir)
       java.nio.file.Files.write(done, Array.emptyByteArray)
     }
     StreamIn(name, src, rowsPerBatch.size)
@@ -280,8 +280,7 @@ object StreamFuzz {
     if (args.headOption.contains("--golden")) {
       val path = args(1)
       val n = args.lift(2).map(_.toInt).getOrElse(16)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_sfz_golden_").toString
+      val dir = graft.Tables.scratchDir("graft_sfz_golden_").toString
       val entries = (0 until n).map { s =>
         val (name, df, _) = genCase(spark, dir, s)
         s"""  "$name": "${Fuzz.caseHash(df)}""""

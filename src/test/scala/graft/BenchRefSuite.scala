@@ -421,6 +421,31 @@ class BenchRefSuite extends AnyFunSuite {
         s"extra: ${(ratios.keySet -- SparkEntry.queries.keySet).toSeq.sorted}")
   }
 
+  test("every graft.tools main is documented in README §Running or the verify skill") {
+    // A main nobody can find is a probe that outlived its question:
+    // each one is listed where runs are documented, or deleted. Per-query
+    // timing and traces go through perfbench.Main, not a new probe.
+    def read(p: String): String = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    val readme = read("README.md")
+    val from = readme.indexOf("\n## Running")
+    assert(from >= 0, "README.md lost its §Running section")
+    val to = readme.indexOf("\n## ", from + 1)
+    val documented = readme.substring(from, if (to < 0) readme.length else to) +
+      read(".claude/skills/verify/SKILL.md")
+    val mains = for {
+      f <- new java.io.File("src/main/scala/graft/tools").listFiles().toSeq
+      if f.getName.endsWith(".scala")
+      src = read(f.getPath)
+      i = src.indexOf("def main(")
+      if i >= 0
+    } yield "(?m)^object (\\w+)".r.findAllMatchIn(src.take(i)).toSeq.last.group(1)
+    assert(mains.nonEmpty, "no mains found under src/main/scala/graft/tools")
+    val missing = mains.filterNot(m => documented.contains(s"graft.tools.$m")).sorted
+    assert(missing.isEmpty, s"graft.tools mains with no documented run: $missing — " +
+      "list each in README §Running (or the verify skill), or delete it")
+  }
+
   test("overRef needs BOTH >1.5x relative AND >80ms absolute") {
     val ref = Map("big" -> 1.0, "small" -> 0.04)
     assert(Bench.overRef(ref, "big", 1.6))       // 1.6x and +0.6 s

@@ -55,10 +55,10 @@ class DeterminismSuite extends SparkTestBase {
     assertSameRows("13 shuffle partitions", alt)
   }
 
-  /** Bench exposes SPARK_GRAFT_AQE=false to price AQE's re-planning
-    * cost — that knob must be able to change TIMING only. Runtime
-    * re-planning (coalesced exchanges, switched join strategies) must
-    * never reach row values or order. */
+  /** AQE is a timing decision, not a semantic one: Bench and Verify run
+    * with it on, and a deployment may turn it off. Runtime re-planning
+    * (coalesced exchanges, switched join strategies) must never reach
+    * row values or order. */
   test("results are AQE-invariant (the bench AQE knob changes timing only)") {
     val alt = spark.newSession()
     alt.conf.set("spark.sql.adaptive.enabled", "false")

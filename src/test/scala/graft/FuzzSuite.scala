@@ -27,7 +27,7 @@ class FuzzSuite extends SparkTestBase {
 
   test("48 committed fuzz seeds reproduce their DuckDB-attested hashes") {
     assert(golden.size == 48, s"golden file should pin 48 cases, has ${golden.size}")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuzz_suite_").toString
+    val dir = Tables.scratchDir("graft_fuzz_suite_").toString
     val mismatches = (0 until 48).flatMap { seed =>
       val (name, df, _) = Fuzz.genCase(spark, dir, seed)
       val h = Fuzz.caseHash(df)

@@ -563,7 +563,7 @@ class PlanSuite extends SparkTestBase {
   }
 
   test("ev_sliding aggregates on a long key with no Expand or per-input-row timestamp work") {
-    // The r15 A/B win (SlidingProbe: window()'s struct-keyed Expand →
+    // The r15 A/B win (window()'s struct-keyed Expand →
     // integer-µs explode, 0.187→0.152 s at sf0.1): the plan must keep
     // the hot path in primitive longs — no Expand node, no
     // struct-of-timestamps grouping key; the single timestamp
@@ -733,7 +733,7 @@ class PlanSuite extends SparkTestBase {
   /** The IVF pair searches must declare their own parallelism: the
     * pair stage's cost is quadratic in cell size while its input
     * bytes are linear, so AQE's byte-based coalescing serializes it
-    * on small inputs (the r12 CoalesceFloorProbe finding — 1.17 s on
+    * on small inputs (the r12 A/B finding — 1.17 s on
     * one core vs 0.30 s spread). The fix is an explicit hash
     * repartition on `cell` feeding BOTH self-join sides, which the
     * join then reuses — the plan must carry that exchange and must

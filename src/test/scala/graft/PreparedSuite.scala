@@ -150,6 +150,28 @@ class PreparedSuite extends SparkTestBase {
         "the convention pin above is not actually armed")
   }
 
+  test("a corpus table and a path read of the same file share one cached scan") {
+    // Tables' loaders and readCached key on the parquet path, so a
+    // read-back of a corpus file reuses the loader's scan and starts no
+    // schema-inference job.
+    val s2 = spark.newSession()
+    val t = Tables.lineitem(s2, sf)
+    org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val r = try {
+      val df = Tables.readCached(s2, s"$sf/lineitem.parquet")
+      org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+      df
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get == 0, s"path read of a loaded table started ${jobs.get} job(s)")
+    assert(r eq t, "path read rebuilt the loader's scan")
+  }
+
   test("memoized re-count matches a fresh build and actually runs jobs") {
     val name = "join_5way_q5"
     val fresh = SparkEntry.queries(name)(spark, sf).count()

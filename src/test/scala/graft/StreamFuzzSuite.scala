@@ -29,8 +29,7 @@ class StreamFuzzSuite extends SparkTestBase {
   test("16 committed streaming fuzz seeds reproduce their DuckDB-attested hashes") {
     assert(golden.size == 16,
       s"golden file should pin 16 cases, has ${golden.size}")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sfz_suite_").toString
+    val dir = Tables.scratchDir("graft_sfz_suite_").toString
     val mismatches = (0 until 16).flatMap { seed =>
       val (name, df, _) = StreamFuzz.genCase(spark, dir, seed)
       val h = Fuzz.caseHash(df)
