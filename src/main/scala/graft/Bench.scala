@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Parse a flat {"name":sec,...} clean-reference file. Tolerant of
     * whitespace around the colon (any standard JSON writer emits
@@ -357,58 +357,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE stays ON (the at-scale behavior: runtime skew split /
-      // partition coalescing).
-      .config("spark.sql.adaptive.enabled", "true")
-      // Size the generated-class cache to the workload (static conf,
-      // default 100 entries): a 167-query sweep cycles far more than
-      // 100 generated classes, so by the time a query's SECOND timed
-      // pass arrives its classes are evicted and every stage pays
-      // janino recompilation again. graph_pagerank — the widest plan,
-      // ~9 jobs per run — read 2.4–2.8 s inside every full sweep vs
-      // 1.3–1.6 s isolated for two rounds straight; with the cache
-      // sized to the sweep the in-sweep number IS the isolated number
-      // (r11 A/B: before 1.97/1.70/1.50 s, after-166-queries
-      // 1.44/1.25/1.31 s at 5000 entries vs 2.66 s first-run-after at
-      // the default). Same knob a long-lived production session serving
-      // a wide query mix would set.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // AQE's partition-coalescing floor stays at the 1m DEFAULT — a
-      // deliberate, measured decision, not an oversight. A five-sweep
-      // A/B (r12, an isolated floor probe + full-inventory runs at 1m /
-      // 256kb / 128kb / 64kb) showed lowering the floor re-parallelizes
-      // small-shuffle queries (total 35.0 -> 32.2-33.5 s) but taxes
-      // every ITERATIVE plan with per-iteration task-launch overhead
-      // (graph_pagerank 1.34 -> 1.8-2.6 s, win_islands and ev_funnel
-      // regress at 64kb) — a regression trade, not a win. The one
-      // query whose gap was structural (llm_ann_ivf_probe: pair-cost
-      // quadratic in cell size, input bytes linear, so byte-based
-      // coalescing serialized ~800 k dot products onto one core) is
-      // fixed where it belongs, in the operator (Ann.spreadByCell).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-      // Shuffle scratch on the job-scoped fast tier (/dev/shm when
-      // writable — same policy, and same cleanup hook, as
-      // Tables.scratchDir): the ×100 crossover profile showed tiny
-      // shuffles dominated by DiskBlockObjectWriter file create/open/
-      // delete on disk-backed /tmp (bypass writer: numPartitions files
-      // per map task), ~3.5× the samples of the aggregation itself on
-      // ev_tumbling. A cluster deployment points local.dir at local
-      // SSD for exactly this reason; durable outputs never live here.
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        graft.Tables.scratchDir("graft_shuffle_").toString))
-      // Shuffle writer choice for the 32-partition exchanges (Spark's
-      // default, kept after the r14 A/B; see NOTES r14): bypass writes
-      // numPartitions files per map task, sort writes one data+index pair.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "200")
-      // Same session TZ as Verify: timestamp-literal filters must
-      // select the same rows here as in the scored correctness run,
-      // or a non-UTC box would time different work.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JIT/codegen/shuffle/parquet machinery once so the first
     // timed query doesn't absorb ~5 s of one-time JVM costs. Warmup is
@@ -505,10 +454,7 @@ object Bench {
     // the old fresh-build path.
     def timeOne(name: String): Sample = {
       val s0 = stealJiffies
-      val t0 = System.nanoTime()
-      val ok = try { graft.api.Prepared.df(spark, sfDir, name).count(); true }
-        catch { case _: Throwable => false }
-      val el = (System.nanoTime() - t0) / 1e9
+      val (el, ok) = timeCount(spark, sfDir, name)
       val s1 = stealJiffies
       Sample(el, if (s0 < 0 || s1 < 0) -1L else s1 - s0, ok)
     }
@@ -548,17 +494,9 @@ object Bench {
       Bench.overRef(refTimes, name, sec)
 
     val queries = SparkEntry.queries.keys.toSeq
-    // Warm pass (untimed — also fills the Prepared cache). The
-    // returned DataFrames are PINNED for the sweep's duration: the
-    // prepared cache holds its values weakly (serving-host leak guard,
-    // r14 verdict #5), so without a strong holder a major GC between
-    // passes could evict a plan and inject its driver-side rebuild
-    // into a timed sample. Side-effecting builders rebuild per call
-    // anyway; pinning their first build is harmless.
-    val warmPin: Seq[org.apache.spark.sql.DataFrame] = queries.flatMap { n =>
-      try { val df = graft.api.Prepared.df(spark, sfDir, n); df.count(); Some(df) }
-      catch { case _: Throwable => None }
-    }
+    // Warm pass (untimed — also fills the Prepared cache); the plans
+    // stay pinned for the sweep's duration (see warmPin).
+    val pinned = warmPin(spark, sfDir, queries)
     // Box-speed calibration (advisory): timed OUTSIDE the sweep
     // windows, compared against the reference's `_calib_s` stamp.
     val calib = try calibKernel() catch { case _: Throwable => -1.0 }
@@ -750,20 +688,17 @@ object Bench {
     // reuse amortizes. The inline "protocol" field says so.
     // min-of-2; runs after the timed sweep so it can't pollute the
     // samples.
-    val splitShapes = Seq("win_rank_dense", "llm_knn_cosine",
-      "agg_q1_pricing", "join_5way_q5", "ev_session", "topk_limit",
-      "fn_json", "llm_exact_dedup", "ev_tumbling")
     val splitJson = try {
-      val shapes = splitShapes.filter(results.contains).map { name =>
+      val shapes = graft.tools.CrossoverProbe.Shapes.filter(results.contains).map { name =>
         val fn = SparkEntry.queries(name)
         val (ps, es) = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)
           df.queryExecution.executedPlan
           val p = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          graft.api.Prepared.df(spark, sfDir, name).count()
-          (p, (System.nanoTime() - t1) / 1e9)
+          val (e, ok) = timeCount(spark, sfDir, name)
+          require(ok, s"split exec of $name failed")
+          (p, e)
         }.unzip
         s""""$name":{"plan_s":${fmt3(ps.min)},"exec_s":${fmt3(es.min)}}"""
       }
@@ -776,10 +711,11 @@ object Bench {
     // TIMED samples measure the production AvailableNow RESTART path
     // (source listing + state-store open over committed offsets, zero
     // new data) — the full backlog is paid once in the untimed warm
-    // pass. Cold-checkpoint full-backlog times live in NOTES
-    // (StreamColdProbe). (r13: ev_tumbling_stream moved off the
-    // non-durable memory sink onto a foreachBatch parquet overwrite,
-    // closing the last re-streams-every-pass exception.)
+    // pass. Cold-checkpoint full-backlog times live in NOTES (r12)
+    // and in perfbench.Main's `cold` executions. (r13:
+    // ev_tumbling_stream moved off the non-durable memory sink onto a
+    // foreachBatch parquet overwrite, closing the last
+    // re-streams-every-pass exception.)
     // Crossover evidence (r13 verdict #1), embedded verbatim from the
     // committed crossover.json: per-shape Spark-vs-DuckDB ratios at
     // ×1/×10/×100 corpora both engines read, minted by
@@ -833,7 +769,7 @@ object Bench {
       s""""calib_mem_s":${fmt3(calibMem)},""" +
       s""""calib_mem_ref":${calibMemRef.map(fmt3).getOrElse("null")},""" +
       s""""ref_cpus":${refCpus.getOrElse("null")},""" +
-      s""""prepared_pinned":${warmPin.size},""" +
+      s""""prepared_pinned":${pinned.size},""" +
       s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +
       s""""steal_jiffies":$stealDelta,"cpus":$cpus"""
     // crossover rides only the FULL line + file — the short trailing
@@ -895,5 +831,86 @@ object Bench {
       }
     }
     spark.stop()
+  }
+
+  /** The bench session, shared by every harness main that times
+    * queries or synthesizes corpora (CrossoverProbe, ScaleSweep,
+    * PqProbe, SynthTables); perfbench.Main.setup keeps an equal copy.
+    * `cpus` is both the local core count and the shuffle partition
+    * count. */
+  def session(cpus: String): SparkSession = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // AQE stays ON (the at-scale behavior: runtime skew split /
+      // partition coalescing).
+      .config("spark.sql.adaptive.enabled", "true")
+      // Size the generated-class cache to the workload (static conf,
+      // default 100 entries): a 167-query sweep cycles far more than
+      // 100 generated classes, so by the time a query's SECOND timed
+      // pass arrives its classes are evicted and every stage pays
+      // janino recompilation again. graph_pagerank — the widest plan,
+      // ~9 jobs per run — read 2.4–2.8 s inside every full sweep vs
+      // 1.3–1.6 s isolated for two rounds straight; with the cache
+      // sized to the sweep the in-sweep number IS the isolated number
+      // (r11 A/B: before 1.97/1.70/1.50 s, after-166-queries
+      // 1.44/1.25/1.31 s at 5000 entries vs 2.66 s first-run-after at
+      // the default). Same knob a long-lived production session serving
+      // a wide query mix would set.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // AQE's partition-coalescing floor stays at the 1m DEFAULT — a
+      // deliberate, measured decision, not an oversight. A five-sweep
+      // A/B (r12, an isolated floor probe + full-inventory runs at 1m /
+      // 256kb / 128kb / 64kb) showed lowering the floor re-parallelizes
+      // small-shuffle queries (total 35.0 -> 32.2-33.5 s) but taxes
+      // every ITERATIVE plan with per-iteration task-launch overhead
+      // (graph_pagerank 1.34 -> 1.8-2.6 s, win_islands and ev_funnel
+      // regress at 64kb) — a regression trade, not a win. The one
+      // query whose gap was structural (llm_ann_ivf_probe: pair-cost
+      // quadratic in cell size, input bytes linear, so byte-based
+      // coalescing serialized ~800 k dot products onto one core) is
+      // fixed where it belongs, in the operator (Ann.spreadByCell).
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
+      // Shuffle scratch on the job-scoped fast tier (/dev/shm when
+      // writable — same policy, and same cleanup hook, as
+      // Tables.scratchDir): the ×100 crossover profile showed tiny
+      // shuffles dominated by DiskBlockObjectWriter file create/open/
+      // delete on disk-backed /tmp (bypass writer: numPartitions files
+      // per map task), ~3.5× the samples of the aggregation itself on
+      // ev_tumbling. A cluster deployment points local.dir at local
+      // SSD for exactly this reason; durable outputs never live here.
+      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
+        graft.Tables.scratchDir("graft_shuffle_").toString))
+      // Shuffle writer choice for the 32-partition exchanges (Spark's
+      // default, kept after the r14 A/B; see NOTES r14): bypass writes
+      // numPartitions files per map task, sort writes one data+index pair.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "200")
+      // Same session TZ as Verify: timestamp-literal filters must
+      // select the same rows here as in the scored correctness run,
+      // or a non-UTC box would time different work.
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
+  /** Warm pass of the prepared protocol: build each query through
+    * `Prepared.df` and run it once (builder, analysis, codegen and JIT
+    * for its plan). The returned DataFrames PIN the built plans for the
+    * caller's sweep: the prepared cache holds its values weakly
+    * (serving-host leak guard, r14 verdict #5), so without a strong
+    * holder a major GC between passes could evict a plan and inject its
+    * rebuild into a timed sample. Side-effecting builders
+    * rebuild per call anyway; pinning their first build is harmless. */
+  def warmPin(spark: SparkSession, sf: String, names: Seq[String]): Seq[DataFrame] =
+    names.flatMap { n =>
+      try { val df = graft.api.Prepared.df(spark, sf, n); df.count(); Some(df) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm $n @$sf failed: ${e.getMessage}"); None }
+    }
+
+  /** One timed prepared `.count()` of `name`: (seconds, succeeded). */
+  def timeCount(spark: SparkSession, sf: String, name: String): (Double, Boolean) = {
+    val t0 = System.nanoTime()
+    val ok = try { graft.api.Prepared.df(spark, sf, name).count(); true }
+      catch { case _: Throwable => false }
+    ((System.nanoTime() - t0) / 1e9, ok)
   }
 }

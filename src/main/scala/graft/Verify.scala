@@ -4,6 +4,27 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal. Escapes backslash, quote and ALL control
+    * chars (<0x20): a tab or CR in builder-authored SQL would otherwise
+    * make tools/check.py's json.load fail and silently zero the round's
+    * correctness. The one escaper of every oracle dump (Verify, Fuzz,
+    * StreamFuzz, CrossoverProbe). */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Write `m` as one flat `{"k": "v",...}` JSON object — the layout
+    * of oracle_sql.json and failures.json. */
+  def writeJsonMap(path: String, m: Iterable[(String, String)]): Unit =
+    Files.writeString(Paths.get(path), m
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     // Optional trailing args restrict the dump to named queries —
@@ -118,29 +139,13 @@ object Verify {
         failures(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJsonMap(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     // Per-query failure REASONS as a round artifact: in round 9 the 36
     // events-schema failures surfaced only as missing keys in the
     // driver's correctness JSON (the stderr messages were lost with the
     // log), costing the diagnosis a full round. An empty map means a
     // clean dump.
-    val fjson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/failures.json"), fjson)
+    writeJsonMap(s"$outDir/failures.json", failures)
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} queries FAILED — see failures.json")
     // Drain the listener bus so late task-end events are counted.

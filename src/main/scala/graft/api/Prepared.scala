@@ -39,9 +39,10 @@ object Prepared {
     * JVM's lifetime (r14 verdict #5). A collected entry rebuilds via
     * the (pure, repeat-invocation-silent — PreparedSuite) builder:
     * driver-only work, no Spark jobs. Callers that time repeat
-    * executions (Bench, CrossoverProbe, ScaleSweep) pin the warm-built
-    * plans strongly for their sweep's duration so a GC can't inject a
-    * rebuild into a timed sample. */
+    * executions go through Bench.warmPin + Bench.timeCount (Bench's
+    * sweep, CrossoverProbe and ScaleSweep via CrossoverProbe.timeShapes),
+    * which pin the warm-built plans strongly for the sweep's duration so
+    * a GC can't inject a rebuild into a timed sample. */
   private val cache = new java.util.WeakHashMap[SparkSession,
     java.util.concurrent.ConcurrentHashMap[(String, String),
       java.lang.ref.WeakReference[DataFrame]]]()

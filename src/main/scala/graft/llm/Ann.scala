@@ -124,7 +124,7 @@ object Ann {
     * straddle Voronoi boundaries): measured at sf0.01, k=10/iters=2
     * with the hash-sampled init gives 9/14 single-probe and 14/14
     * 2-probe, the best of the k ∈ {4..10} × init sweep
-    * (tools/IvfInitProbe). Every step is bit-reproducible in BOTH
+    * (r4 IVF parameter probe). Every step is bit-reproducible in BOTH
     * engines:
     *
     *  - assignment: nearest centroid by `round(cos, 6)` with ties
@@ -187,10 +187,9 @@ object Ann {
       .select(col("vec_id"), col("embedding"), col("ed"),
         col("cid").as("cell"))
 
-  /** Recompute centroids as exact quantized means of their members.
-    * private[graft] so tools/IvfInitProbe sweeps the SAME arithmetic
-    * it justifies parameters for. */
-  private[graft] def update(assigned: DataFrame): DataFrame =
+  /** Recompute centroids as exact quantized means of their members
+    * (the r4 IVF parameter probe swept this same arithmetic). */
+  private def update(assigned: DataFrame): DataFrame =
     assigned
       .select(col("cell"), posexplode(col("ed")).as(Seq("d", "v")))
       .groupBy(col("cell"), col("d"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   *    at some SF the driver dies trying to collect the build side.
   *    The hint must be applied only below a measured cap; past it the
   *    query degrades to the shuffle join AQE would pick (measured in
-  *    ScaleProbe at ×100 orders: same scaling exponent, flat ~2.3×
+  *    the r8 scale probe at ×100 orders: same scaling exponent, flat ~2.3×
   *    constant — degradation, not a cliff).
   *
   *  - The cap must be BYTES, not rows (r8 judge): a 10 M-row cap is

@@ -19,13 +19,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamDemo {
 
-  /** Probe knob: bumping this forces FRESH stream roots (cold
-    * checkpoint + empty sink) for every later invocation in the same
-    * session — [[graft.tools.StreamColdProbe]] uses it to time
-    * full-backlog processing in a warm engine, the number checkpoint
-    * reuse removes from the bench. Production code never bumps it. */
-  private[graft] val rootEpoch = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** One durable scratch root (checkpoint + file-sink output) per
     * (session, sf, query), reused across invocations — the r10-verdict
     * streaming lever. First invocation processes the whole backlog and
@@ -39,12 +32,12 @@ object StreamDemo {
     * source listing + state-store open + the DELTA since the last run
     * (here: empty). A fresh checkpoint per invocation would instead
     * re-stream the entire history every time — the anti-pattern this
-    * removes. One root per (session, sf, query, epoch) in the fit-once
+    * removes. One root per (session, sf, query) in the fit-once
     * store, like the dim/edge checkpoints. */
   private[graft] def streamRoot(spark: SparkSession, sf: String,
       query: String): java.nio.file.Path =
     java.nio.file.Paths.get(graft.FitOnce.scratch(spark, sf,
-      s"StreamDemo.root.$query.${rootEpoch.get}", s"graft_${query}_")(_.toString))
+      s"StreamDemo.root.$query", s"graft_${query}_")(_.toString))
 
   /** State-store partition count for the streaming queries, sized to
     * the state volume (~10^4 windows/sessions in this corpus) rather

@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   */
 object CrossoverProbe {
 
-  /** The 9 BASELINE.md comparison shapes (Bench.splitShapes order). */
+  /** The 9 BASELINE.md comparison shapes — also the shapes of Bench's
+    * plan/exec split. */
   val Shapes: Seq[String] = Seq("win_rank_dense", "llm_knn_cosine",
     "agg_q1_pricing", "join_5way_q5", "ev_session", "topk_limit",
     "fn_json", "llm_exact_dedup", "ev_tumbling")
@@ -159,10 +160,29 @@ object CrossoverProbe {
           }.reduce(_ unionAll _)
         }
       out.write.mode("overwrite").parquet(s"$xDir/$name.parquet")
+      stripJobIds(new java.io.File(s"$xDir/$name.parquet"))
       System.err.println(s"[crossover] wrote x$factor $name")
       }
     }
     java.nio.file.Files.write(done, Array.emptyByteArray)
+  }
+
+  /** Spark names each part file after its write job's random UUID
+    * (`part-00003-<uuid>-c000.snappy.parquet`). A scan orders its
+    * splits by size, so files of equal size keep the directory
+    * listing's order — which on ext4 follows the names. Two syntheses
+    * of the same bytes could then feed a range shuffle's sampler in a
+    * different order (`part` has two size ties; win_rank_dense
+    * range-shuffles it). Dropping the UUID, and moving each `.crc`
+    * with its file, makes the layout a function of the data alone;
+    * which rows each file holds is unchanged. */
+  private def stripJobIds(dir: java.io.File): Unit = {
+    val uuid = "-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"
+    dir.listFiles().foreach { f =>
+      val plain = f.getName.replaceFirst(uuid, "")
+      if (plain != f.getName)
+        java.nio.file.Files.move(f.toPath, f.toPath.resolveSibling(plain))
+    }
   }
 
   /** Extend an existing ×N corpus with tables its original shape list
@@ -172,10 +192,7 @@ object CrossoverProbe {
     * Heavy tables already on disk are kept as-is. */
   private[tools] def extendCorpus(factor: Int, names: Seq[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.session("32")
     spark.sparkContext.setLogLevel("ERROR")
     val xDir = java.nio.file.Paths.get("target", "crossover", s"x$factor")
       .toAbsolutePath.toString
@@ -186,32 +203,22 @@ object CrossoverProbe {
     spark.stop()
   }
 
-  /** Warm + `passes` interleaved timed counts per shape; ALL samples
-    * are returned (chronological) — the committed artifact carries the
-    * full runs array per leg with the headline = min, so a reader sees
-    * the spread instead of one draw (r16 verdict #3: the sub-second
-    * ×100 legs drift ±50% with zero steal, and a single noisy draw
-    * could flip a shape's headline ratio across the 1.0× line). */
-  private def timeShapes(spark: SparkSession, dir: String,
+  /** Warm + `passes` interleaved timed counts per shape; ALL ok
+    * samples are returned (chronological) — the committed artifact
+    * carries the full runs array per leg with the headline = min, so a
+    * reader sees the spread instead of one draw (r16 verdict #3: the
+    * sub-second ×100 legs drift ±50% with zero steal, and a single
+    * noisy draw could flip a shape's headline ratio across the 1.0×
+    * line). ScaleSweep times the whole inventory through it too. */
+  private[tools] def timeShapes(spark: SparkSession, dir: String,
       shapes: Seq[String] = Shapes,
       passes: Int = 3): Map[String, List[Double]] = {
-    // Warm pass: builder + analysis into the prepared cache + one
-    // execution (codegen/JIT for these plans on this corpus). The
-    // built plans are PINNED for the timed loop — the prepared cache
-    // holds them weakly (session-leak guard), and a GC between passes
-    // must not inject a rebuild into a timed sample.
-    val pin: Seq[DataFrame] = shapes.flatMap { n =>
-      try { val df = graft.api.Prepared.df(spark, dir, n); df.count(); Some(df) }
-      catch { case e: Throwable =>
-        System.err.println(s"[crossover] warm $n failed: ${e.getMessage}"); None }
-    }
+    val pin = graft.Bench.warmPin(spark, dir, shapes)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     for (_ <- 1 to passes; n <- shapes) {
-      val t0 = System.nanoTime()
-      val ok = try { graft.api.Prepared.df(spark, dir, n).count(); true }
-        catch { case _: Throwable => false }
-      if (ok) samples(n) ::= (System.nanoTime() - t0) / 1e9
+      val (sec, ok) = graft.Bench.timeCount(spark, dir, n)
+      if (ok) samples(n) ::= sec
     }
     require(pin.length <= shapes.length) // keeps the pin live past the loop
     shapes.map(n => n -> samples(n).reverse).toMap
@@ -219,45 +226,31 @@ object CrossoverProbe {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_X", "10").toInt
+    val factor = 10
     // Second leg: a bigger factor for every shape whose ×100 corpus is
     // cheap to synthesize — all but knn, whose all-pairs work is
     // quadratic in the factor (DuckDB would need ~45 min at ×100;
     // its crossover is already settled at ×10: 0.06×).
     val factor2 = sys.env.getOrElse("SPARK_GRAFT_X2", "100").toInt
-    val shapes2 = sys.env.getOrElse("SPARK_GRAFT_X2_SHAPES",
-      Shapes.filterNot(_ == "llm_knn_cosine").mkString(","))
-      .split(",").map(_.trim)
-      .filter(_.nonEmpty).toSeq
+    val shapes2 = Shapes.filterNot(_ == "llm_knn_cosine")
     val outRoot = java.nio.file.Paths.get("target", "crossover")
     java.nio.file.Files.createDirectories(outRoot)
-    // The bench session config (Bench.scala) — the protocol under
-    // which the scored numbers are produced.
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        graft.Tables.scratchDir("graft_shuffle_").toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // The bench session — the protocol under which the scored numbers
+    // are produced.
+    val spark = graft.Bench.session("32")
     spark.sparkContext.setLogLevel("ERROR")
 
     val xDir = outRoot.resolve(s"x$factor").toAbsolutePath.toString
     synthesize(spark, base, xDir, factor)
     val x2Dir = outRoot.resolve(s"x$factor2").toAbsolutePath.toString
-    if (factor2 > 0 && shapes2.nonEmpty) {
+    if (factor2 > 0) {
       val need = shapes2.flatMap(shapeTables).distinct.toSet
       synthesize(spark, base, x2Dir, factor2,
         specs.filter(s => need(s._1) || s._2.isEmpty))
     }
 
-    val oracle = graft.SparkEntry.oracleSql
-    val oracleJson = Shapes.map { n =>
-      "\"" + n + "\":" + "\"" + oracle(n)
-        .replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    }.mkString("{", ",", "}")
-    java.nio.file.Files.write(outRoot.resolve("oracle_sql.json"),
-      oracleJson.getBytes("UTF-8"))
+    graft.Verify.writeJsonMap(outRoot.resolve("oracle_sql.json").toString,
+      Shapes.map(n => n -> graft.SparkEntry.oracleSql(n)))
 
     // Box-speed calibration bracketing the Spark legs (the Bench
     // kernel): sub-second ×100 legs drift ±50% with zero steal on this
@@ -271,7 +264,7 @@ object CrossoverProbe {
     // The ×100 legs get FIVE interleaved passes (still well under a
     // minute of timing for 8 sub-second shapes): they are the
     // load-bearing "floor proven" evidence and ride the most box drift.
-    val t2 = if (factor2 > 0 && shapes2.nonEmpty)
+    val t2 = if (factor2 > 0)
       timeShapes(spark, x2Dir, shapes2, passes = 5)
       else Map.empty[String, List[Double]]
     val calibPost = graft.Bench.calibKernel()

@@ -337,16 +337,6 @@ object Fuzz {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private def jsonEsc(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def session(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[8]")
@@ -360,46 +350,52 @@ object Fuzz {
     s
   }
 
-  def main(args: Array[String]): Unit = {
+  /** The golden/dump loop of both fuzzers' mains (each passes its own
+    * tag, golden count and default last seed; the CLI is the same):
+    *  - `--golden <jsonPath> [n]` writes seed → [[caseHash]] for the
+    *    first n seeds, the committed suite goldens;
+    *  - `<outDir> [fromSeed] [toSeed]` writes every case's result
+    *    parquet plus oracle_sql.json for tools/check.py, and exits 2
+    *    if any case failed to generate. */
+  private[tools] def drive(args: Array[String], tag: String, goldens: Int,
+      toSeed: Int)(gen: (SparkSession, String, Int) => (String, DataFrame, String)): Unit = {
     val spark = session()
     if (args.headOption.contains("--golden")) {
-      // Emit the committed suite goldens: seed → caseHash, first n seeds.
       val path = args(1)
-      val n = args.lift(2).map(_.toInt).getOrElse(48)
-      val dir = graft.Tables.scratchDir("graft_fuzz_golden_").toString
+      val n = args.lift(2).map(_.toInt).getOrElse(goldens)
+      val dir = graft.Tables.scratchDir(s"graft_${tag}_golden_").toString
       val entries = (0 until n).map { s =>
-        val (name, df, _) = genCase(spark, dir, s)
-        s"""  ${jsonEsc(name)}: ${jsonEsc(caseHash(df))}"""
+        val (name, df, _) = gen(spark, dir, s)
+        s"""  ${graft.Verify.jsonString(name)}: ${graft.Verify.jsonString(caseHash(df))}"""
       }
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
         entries.mkString("{\n", ",\n", "\n}\n"))
-      println(s"wrote $n goldens to $path")
+      println(s"[$tag] wrote $n goldens to $path")
     } else {
       val dir = new java.io.File(args(0)).getAbsolutePath
       val from = args.lift(1).map(_.toInt).getOrElse(0)
-      val to = args.lift(2).map(_.toInt).getOrElse(1000)
+      val to = args.lift(2).map(_.toInt).getOrElse(toSeed)
       new java.io.File(dir).mkdirs()
       val oracle = scala.collection.mutable.LinkedHashMap.empty[String, String]
       var failed = 0
       for (seed <- from until to) {
         try {
-          val (name, df, sql) = genCase(spark, dir, seed)
+          val (name, df, sql) = gen(spark, dir, seed)
           df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
           oracle(name) = sql
         } catch { case e: Throwable =>
           failed += 1
-          System.err.println(s"[fuzz] seed $seed failed: ${e.getMessage}")
+          System.err.println(s"[$tag] seed $seed failed: ${e.getMessage}")
         }
-        if ((seed + 1) % 100 == 0)
-          println(s"[fuzz] ${seed + 1 - from}/${to - from} cases dumped")
+        if ((seed + 1 - from) % 50 == 0)
+          println(s"[$tag] ${seed + 1 - from}/${to - from} cases dumped")
       }
-      val json = oracle.map { case (k, v) => s"${jsonEsc(k)}: ${jsonEsc(v)}" }
-        .mkString("{", ",", "}")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/oracle_sql.json"), json)
-      println(s"[fuzz] ${oracle.size} cases, $failed generation failures → $dir")
+      graft.Verify.writeJsonMap(s"$dir/oracle_sql.json", oracle)
+      println(s"[$tag] ${oracle.size} cases, $failed generation failures → $dir")
       if (failed > 0) sys.exit(2)
     }
     spark.stop()
   }
+
+  def main(args: Array[String]): Unit = drive(args, "fuzz", 48, 1000)(genCase)
 }

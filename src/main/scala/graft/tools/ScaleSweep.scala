@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-inventory scale audit: time EVERY declared query on the base
   * corpus and on the CrossoverProbe ×N corpus (same prepared protocol
   * as the bench) and report per-query ratios, worst first. The sf0.1
@@ -24,36 +22,15 @@ object ScaleSweep {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val xDir = args.headOption.getOrElse("target/crossover/x10")
     val flagRatio = args.lift(1).map(_.toDouble).getOrElse(15.0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        graft.Tables.scratchDir("graft_shuffle_").toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Bench.session("32")
     spark.sparkContext.setLogLevel("ERROR")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
 
-    def sweep(dir: String, qnames: Seq[String] = names): Map[String, Double] = {
-      // warm (fills Prepared + FitOnce checkpoints for this dir); the
-      // built plans are pinned for the timed loop — the prepared cache
-      // holds them weakly (session-leak guard).
-      val pin = qnames.flatMap { n =>
-        try { val df = graft.api.Prepared.df(spark, dir, n); df.count(); Some(df) }
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] warm $n @$dir failed: ${e.getMessage}"); None }
-      }
-      val t = scala.collection.mutable.Map.empty[String, List[Double]]
-        .withDefaultValue(Nil)
-      for (_ <- 1 to 2; n <- qnames) {
-        val t0 = System.nanoTime()
-        val ok = try { graft.api.Prepared.df(spark, dir, n).count(); true }
-          catch { case _: Throwable => false }
-        if (ok) t(n) ::= (System.nanoTime() - t0) / 1e9
-      }
-      require(pin.length <= qnames.length) // keeps the pin live past the loop
-      qnames.map(n => n -> (if (t(n).isEmpty) -1.0 else t(n).min)).toMap
-    }
+    // Warm (fills Prepared + FitOnce checkpoints for this dir), then
+    // min of 2 timed passes; -1 when every pass failed.
+    def sweep(dir: String, qnames: Seq[String] = names): Map[String, Double] =
+      CrossoverProbe.timeShapes(spark, dir, qnames, passes = 2).map {
+        case (n, t) => n -> (if (t.isEmpty) -1.0 else t.min) }
 
     val tBase = sweep(base)
     val tX = sweep(xDir)
@@ -84,24 +61,21 @@ object ScaleSweep {
     val flaggedJson = flagged.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val factor = "x(\\d+)$".r.findFirstMatchIn(xDir.stripSuffix("/"))
       .map(_.group(1)).getOrElse("0")
-    // Optional deeper spot leg for NAMED queries (r16 verdict item:
+    // Deeper spot leg for the iterative graph pair (r16 verdict item:
     // the iterative graph pair were the only non-by-design shapes
     // above 3x at x10 — superstep/orientation overhead, claimed
     // fixed-ish; a x100 measurement adjudicates flatten-vs-real-work
     // the way the q5/tumbling probes did in r14). Runs only when the
-    // x2 corpus exists (CrossoverProbe synthesizes it) and every named
-    // query's tables are present there; results ride scalesweep.json
-    // as x2_* keys.
+    // x2 corpus exists (CrossoverProbe synthesizes it); results ride
+    // scalesweep.json as x2_* keys.
     val x2Dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_X2_DIR",
       "target/crossover/x100")
-    val x2Queries = sys.env.getOrElse("SPARK_GRAFT_SCALE_X2_QUERIES",
-        "graph_pagerank,graph_triangles")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq.filter(names.contains)
+    val x2Queries = Seq("graph_pagerank", "graph_triangles")
     val x2Ready = java.nio.file.Files.exists(
       java.nio.file.Paths.get(x2Dir, "_GRAFT_X_DONE"))
     val x2Block: String =
-      if (!x2Ready || x2Queries.isEmpty) {
-        if (!x2Ready) System.err.println(
+      if (!x2Ready) {
+        System.err.println(
           s"[scale] x2 leg skipped: $x2Dir not synthesized (run CrossoverProbe)")
         ""
       } else {

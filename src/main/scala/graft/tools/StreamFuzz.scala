@@ -275,46 +275,6 @@ object StreamFuzz {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = Fuzz.session()
-    if (args.headOption.contains("--golden")) {
-      val path = args(1)
-      val n = args.lift(2).map(_.toInt).getOrElse(16)
-      val dir = graft.Tables.scratchDir("graft_sfz_golden_").toString
-      val entries = (0 until n).map { s =>
-        val (name, df, _) = genCase(spark, dir, s)
-        s"""  "$name": "${Fuzz.caseHash(df)}""""
-      }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-        entries.mkString("{\n", ",\n", "\n}\n"))
-      println(s"wrote $n stream goldens to $path")
-    } else {
-      val dir = new java.io.File(args(0)).getAbsolutePath
-      val from = args.lift(1).map(_.toInt).getOrElse(0)
-      val to = args.lift(2).map(_.toInt).getOrElse(600)
-      new java.io.File(dir).mkdirs()
-      val oracle = scala.collection.mutable.LinkedHashMap.empty[String, String]
-      var failed = 0
-      for (seed <- from until to) {
-        try {
-          val (name, df, sql) = genCase(spark, dir, seed)
-          df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
-          oracle(name) = sql
-        } catch { case e: Throwable =>
-          failed += 1
-          System.err.println(s"[streamfuzz] seed $seed failed: ${e.getMessage}")
-        }
-        if ((seed + 1 - from) % 50 == 0)
-          println(s"[streamfuzz] ${seed + 1 - from}/${to - from} cases run")
-      }
-      val json = oracle.map { case (k, v) =>
-        "\"" + k + "\": \"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      }.mkString("{", ",", "}")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$dir/oracle_sql.json"), json)
-      println(s"[streamfuzz] ${oracle.size} cases, $failed generation failures → $dir")
-      if (failed > 0) sys.exit(2)
-    }
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Fuzz.drive(args, "streamfuzz", 16, 600)(genCase)
 }

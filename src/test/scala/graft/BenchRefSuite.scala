@@ -273,6 +273,25 @@ class BenchRefSuite extends AnyFunSuite {
     assert(!Bench.jsonBalanced("""{"a":"x}"""))        // unterminated string
   }
 
+  test("oracle-dump writer round-trips quotes, backslashes and control chars") {
+    // Every oracle_sql.json (Verify, Fuzz, StreamFuzz, CrossoverProbe)
+    // goes through Verify.writeJsonMap; a raw control char would make a
+    // strict reader (Jackson here, json.load in tools/check.py) refuse
+    // the whole file.
+    val nasty = "q\"b\\t\tr\rn\nu\u0001"
+    val m = Seq(nasty -> s"SELECT '$nasty' AS s", "plain" -> nasty, "k\u0001" -> "")
+    val f = java.nio.file.Files.createTempFile("graft_oracle_", ".json")
+    try {
+      Verify.writeJsonMap(f.toString, m)
+      val raw = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      assert(!raw.exists(_ < ' '), s"unescaped control char in $raw")
+      val back = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(f.toFile, classOf[java.util.LinkedHashMap[String, String]])
+      import scala.jdk.CollectionConverters._
+      assert(back.asScala.toSeq == m)
+    } finally java.nio.file.Files.delete(f)
+  }
+
   test("stampFromJson reads both stamp forms and rejects non-hashes") {
     assert(Bench.stampFromJson("""{"_mint_commit":"68305e9abc","q":1}""")
       == Some("68305e9abc"))

@@ -236,7 +236,7 @@ class GoldenSuite extends SparkTestBase {
     // The k-means-trained quantizer must place most genuinely-near
     // pairs in one cell. k=10 / 2 Lloyd iterations / hash-sampled init
     // measures 9/14 single-probe and 14/14 2-probe at sf0.01 — the
-    // best of the tools/IvfInitProbe k × init sweep. Containment is
+    // best of the r4 IVF k × init sweep. Containment is
     // structural (same similarity arithmetic + threshold as the exact
     // scan), recall is the trained-quantizer quality bar.
     val exact = llm.Ann.cosNearDup(spark, sf01).select("x", "y").collect()
