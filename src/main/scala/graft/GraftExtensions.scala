@@ -24,9 +24,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), b))
     }
-    // Planner extensions (the top-k strategy, the order-aware window
-    // exchange and JSON field rules); table loads also install them lazily per
-    // session, so both entry paths work.
+    // Planner extensions (the top-k and sample-free sort strategies,
+    // the order-aware window exchange and JSON field rules); table loads
+    // also install them lazily per session, so both entry paths work.
     graft.plans.PlannerExtensions.inject(ext)
   }
 }

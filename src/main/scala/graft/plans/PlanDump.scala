@@ -2,12 +2,19 @@ package graft.plans
 
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 /** Dumps `explain("formatted")` output for representative queries to
   * PLANS.md — the audit trail for the scale properties PlanSuite
-  * asserts. Run: sbt "runMain graft.plans.PlanDump [sfDir] [outFile]".
+  * asserts. Each pick shows two plans: the one planned before
+  * execution (under AQE, `isFinalPlan=false`) and the final adaptive
+  * plan tree of one write through the `noop` sink, which carries the
+  * choices AQE made at run time from the sizes of finished stages.
+  * Run: sbt "runMain graft.plans.PlanDump [sfDir] [outFile]".
   */
 object PlanDump {
   private val picks = Seq(
@@ -25,7 +32,8 @@ object PlanDump {
     "join_interval_overlap", "ev_scd2", "llm_ann_pq",
     "ev_markov_transition", "ev_rolling_wau", "llm_pmi_bigrams",
     "graph_triangles", "graph_pagerank", "agg_heavy_hitters",
-    "ev_peak_concurrency", "llm_e2e_curation", "fn_json")
+    "ev_peak_concurrency", "llm_e2e_curation", "fn_json",
+    "join_left", "fn_hash")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -37,13 +45,28 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val written = new LinkedBlockingQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = written.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    val formatted = ExplainMode.fromString("formatted")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans (generated by graft.plans.PlanDump)\n\n")
     sb.append(s"Source: `$sfDir`. Regenerate: `sbt \"runMain graft.plans.PlanDump\"`.\n")
+    sb.append("Per query: the formatted plan before execution, then the final " +
+      "adaptive plan tree of one `noop` write.\n")
     picks.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val txt = df.queryExecution.explainString(formatted)
+      written.clear()
+      df.write.format("noop").mode("overwrite").save()
+      val run = Option(written.poll(60, TimeUnit.SECONDS))
+        .getOrElse(sys.error(s"$name: no executed plan reported for the noop write"))
       sb.append(s"\n## $name\n\n```\n$txt```\n")
+      val fin = run.executedPlan.collectFirst { case a: AdaptiveSparkPlanExec => a.executedPlan }
+        .getOrElse(run.executedPlan)
+      sb.append(s"\nFinal adaptive plan of the noop write:\n\n```\n${fin.treeString}```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[plandump] wrote $out")

@@ -3,11 +3,12 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** graft's planner extensions, installed one of two ways:
   *
   *   - per session, lazily: [[install]] appends them to
-  *     `spark.experimental` (the strategy to `extraStrategies`, the
+  *     `spark.experimental` (the strategies to `extraStrategies`, the
   *     rules to `extraOptimizations`, which run after every built-in
   *     optimizer batch). Called by every table load and by
   *     `GraftOps.topKPerKey`, so a plain session picks them up before
@@ -15,8 +16,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *   - deployment-wide: [[inject]] from [[graft.GraftExtensions]] (the
   *     rules as pre-CBO rules, after operator optimization).
   *
-  * Both paths may be active on one session; the strategy and the rules
-  * are idempotent, so running either twice changes nothing.
+  * Both paths may be active on one session; the strategies and the
+  * rules are idempotent, so running either twice changes nothing.
   *
   * Locking convention (ADVICE r12): the install's check-then-append
   * synchronizes on `spark.experimental`. External code that also
@@ -30,11 +31,16 @@ object PlannerExtensions {
   /** The optimizer rules, in the order they run. */
   val Rules: Seq[Rule[LogicalPlan]] = Seq(OrderAwareWindowExchange, JsonFieldRewrite)
 
+  /** The planner strategies, in the order they are tried. */
+  val Strategies: Seq[SparkStrategy] = Seq(TopKStrategy, SampleFreeSort)
+
   def install(spark: SparkSession): Unit = {
     val x = spark.experimental
     x.synchronized {
-      if (!x.extraStrategies.contains(TopKStrategy))
-        x.extraStrategies = x.extraStrategies :+ TopKStrategy
+      Strategies.foreach { s =>
+        if (!x.extraStrategies.contains(s))
+          x.extraStrategies = x.extraStrategies :+ s
+      }
       Rules.foreach { r =>
         if (!x.extraOptimizations.contains(r))
           x.extraOptimizations = x.extraOptimizations :+ r
@@ -43,7 +49,7 @@ object PlannerExtensions {
   }
 
   def inject(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => TopKStrategy)
+    Strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
     Rules.foreach(r => ext.injectPreCBORule(_ => r))
   }
 }

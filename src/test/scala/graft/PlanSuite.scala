@@ -781,7 +781,9 @@ class PlanSuite extends SparkTestBase {
 
   /** The final executed plan of `df` materialized through the noop
     * sink (the benchmark's materialization). */
-  private def noopPlan(df: DataFrame): SparkPlan = {
+  private def noopPlan(df: DataFrame): SparkPlan = noopPlanIn(spark, df)
+
+  private def noopPlanIn(s: org.apache.spark.sql.SparkSession, df: DataFrame): SparkPlan = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val got = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
@@ -790,12 +792,12 @@ class PlanSuite extends SparkTestBase {
         got.put(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(l)
+    s.listenerManager.register(l)
     try {
       df.write.format("noop").mode("overwrite").save()
       Option(got.poll(60, java.util.concurrent.TimeUnit.SECONDS))
         .getOrElse(fail("no executed plan reported for the noop write"))
-    } finally spark.listenerManager.unregister(l)
+    } finally s.listenerManager.unregister(l)
   }
 
   private def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
@@ -980,5 +982,160 @@ class PlanSuite extends SparkTestBase {
       SparkSession.setActiveSession(prev)
       SparkSession.setDefaultSession(prev)
     }
+  }
+
+  // ------------------------------------------------------------------
+  // Planner extension lists and the sample-free sort
+  // (graft.plans.PlannerExtensions, graft.plans.SampleFreeSort)
+  // ------------------------------------------------------------------
+
+  test("install twice leaves each strategy and rule once; inject registers the same strategies") {
+    import org.apache.spark.sql.SparkSession
+    val prev = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .withExtensions(new GraftExtensions).getOrCreate()
+      assert(s2 ne prev, "expected a fresh session over the shared context")
+      assert(s2.sessionState.planner.extraPlanningStrategies ==
+        plans.PlannerExtensions.Strategies, "inject must register every strategy once")
+      plans.PlannerExtensions.install(s2)
+      plans.PlannerExtensions.install(s2)
+      assert(s2.experimental.extraStrategies == plans.PlannerExtensions.Strategies)
+      assert(s2.experimental.extraOptimizations == plans.PlannerExtensions.Rules)
+    } finally {
+      SparkSession.setActiveSession(prev)
+      SparkSession.setDefaultSession(prev)
+    }
+  }
+
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+
+  /** A fresh session over the shared context, with the planner
+    * extensions installed and `confs` set. */
+  private def sibling(confs: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    plans.PlannerExtensions.install(s)
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** A small parquet input (200 rows of [[abc]], four files). */
+  private lazy val smallDir = {
+    val d = Tables.scratchDir("graft_sfs_").resolve("in").toString
+    abc.repartition(4).write.parquet(d)
+    d
+  }
+
+  private def sortedSmall(s: SparkSession): DataFrame =
+    s.read.parquet(smallDir).orderBy(col("b").desc, col("c"))
+
+  private def single(p: SparkPlan): Boolean =
+    shuffles(p).exists(_.outputPartitioning == SinglePartition)
+
+  private def ranged(p: SparkPlan): Boolean =
+    shuffles(p).exists(_.outputPartitioning.isInstanceOf[RangePartitioning])
+
+  /** Jobs the noop write of `df` starts. */
+  private def noopJobs(df: DataFrame): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.GraftTestHooks.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      org.apache.spark.GraftTestHooks.drainListenerBus(sc)
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("sample-free sort: a small sorted scan sorts over one partition, one job fewer") {
+    val on = sortedSmall(sibling())
+    val off = sortedSmall(spark.newSession())
+    val p = on.queryExecution.executedPlan
+    assert(single(p) && !ranged(p), s"expected Exchange SinglePartition:\n$p")
+    assert(p.toString.contains("Exchange SinglePartition"))
+    assert(ranged(off.queryExecution.executedPlan), "the twin without the strategy")
+    assert(noopJobs(on) == noopJobs(off) - 1,
+      "the range partitioner's sampling job must be gone")
+    assert(on.collect().toSeq == off.collect().toSeq)
+  }
+
+  test("sample-free sort: an input above the coalescing size keeps rangepartitioning") {
+    val p = sibling().range(0, 5000000).orderBy(col("id").desc)
+      .queryExecution.executedPlan
+    assert(ranged(p) && !single(p), s"40 MB of ids must range-partition:\n$p")
+    assert(p.toString.contains("rangepartitioning"))
+  }
+
+  test("sample-free sort: AQE off or coalescing off keeps rangepartitioning") {
+    for (conf <- Seq("spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled")) {
+      val p = sortedSmall(sibling(conf -> "false")).queryExecution.executedPlan
+      assert(ranged(p) && !single(p), s"$conf=false must keep the range exchange:\n$p")
+    }
+    val p = sortedSmall(sibling(
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k"))
+      .queryExecution.executedPlan
+    assert(ranged(p), s"without parallelismFirst the advisory size is the bound:\n$p")
+  }
+
+  test("sample-free sort: repartitioned and row-multiplying inputs keep rangepartitioning") {
+    val s = sibling()
+    val in = s.read.parquet(smallDir)
+    val guarded = Seq(
+      "a generate" -> in.selectExpr("explode(array(a, b)) AS e", "c").orderBy("e", "c"),
+      "an expand" -> in.rollup("a", "b").count().orderBy("a", "b"),
+      "a join" -> in.join(in.select(col("c"), col("a").as("a2")), "c").orderBy("c"),
+      "a repartition" -> in.repartition(3).orderBy("c"),
+      "a flatMap" -> {
+        import s.implicits._
+        in.select("c").as[Long].flatMap(c => Seq(c, c)).toDF("c").orderBy("c")
+      })
+    for ((what, df) <- guarded) {
+      val p = df.queryExecution.executedPlan
+      assert(ranged(p) && !single(p), s"a sort over $what must keep the range exchange:\n$p")
+    }
+    // An input already in one partition is sorted where it is, with no
+    // exchange at all, as without the strategy.
+    def onePartition(s: SparkSession): Seq[DataFrame] = {
+      val in = s.read.parquet(smallDir)
+      Seq(in.orderBy(col("c").desc).limit(10).orderBy("c"),
+        in.withColumn("r", rank().over(Window.orderBy("c"))).orderBy("a", "c"))
+    }
+    for ((df, twin) <- onePartition(s).zip(onePartition(spark.newSession()))) {
+      val p = df.queryExecution.executedPlan
+      assert(shuffles(p).size == shuffles(twin.queryExecution.executedPlan).size,
+        s"a sort over one partition must not add an exchange:\n$p")
+    }
+    // win_rank_dense's range shuffle under the windows still serves its
+    // ORDER BY, with no single-partition exchange over it.
+    val w = noopPlan(operators.Windows.winRankDense(spark, sf))
+    assert(!single(w) && shuffles(w).size == 1, s"win_rank_dense changed:\n$w")
+  }
+
+  test("sample-free sort: a sort over an aggregate of a join switches at run time") {
+    def shape(s: SparkSession): DataFrame = {
+      val in = s.read.parquet(smallDir)
+      in.join(in.select(col("a"), col("c").as("c2")), "a")
+        .groupBy("b").agg(org.apache.spark.sql.functions.count("c2").as("n"))
+        .orderBy(col("n").desc, col("b"))
+    }
+    val s = sibling()
+    val df = shape(s)
+    val before = df.queryExecution.executedPlan
+    assert(ranged(before) && !single(before),
+      s"the static estimate (a join product) must not fire:\n$before")
+    val after = noopPlanIn(s, df)
+    assert(single(after) && !ranged(after),
+      s"the final adaptive plan must end with Exchange SinglePartition:\n$after")
+    assert(df.collect().toSeq == shape(spark.newSession()).collect().toSeq)
   }
 }

@@ -1294,4 +1294,62 @@ class PropertySuite extends SparkTestBase {
       assert(!falls(s.getBytes(UTF_8)), s"fast path refused $s"))
   }
 
+  test("sample-free sort emits the range-partitioned sort's row sequence") {
+    // Random keys with ties, nulls, NaN and -0.0/0.0 under every
+    // direction and null ordering. Where the sort key is total the
+    // whole row sequence must match the built-in range-partitioned
+    // sort; where it has ties, tied rows may come in any order, so the
+    // key-column sequence must match (with -0.0 and 0.0 equal, as the
+    // sort compares them).
+    import org.apache.spark.sql.{Column, Row, SparkSession}
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(11)
+    val doubles = Seq(Double.NaN, -0.0, 0.0, 1.5, -2.25, Double.NegativeInfinity)
+    def maybe[T](v: => T): Any = if (rnd.nextInt(6) == 0) null else v
+    val rows = (0 until 400).map { i =>
+      Row(i.toLong, maybe(rnd.nextInt(4)), maybe(doubles(rnd.nextInt(doubles.size))),
+        maybe("s" + rnd.nextInt(3)))
+    }
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("k", IntegerType), StructField("d", DoubleType), StructField("s", StringType)))
+    val dir = Tables.scratchDir("graft_sfs_prop_").resolve("in").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema).write.parquet(dir)
+    val on = spark.newSession()
+    plans.PlannerExtensions.install(on)
+    val off = spark.newSession()
+    object aqe extends AdaptiveSparkPlanHelper
+    def single(s: SparkSession, order: Seq[Column]): Boolean =
+      aqe.collect(s.read.parquet(dir).orderBy(order: _*).queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }.contains(SinglePartition)
+    def key(v: Any): String = v match {
+      case d: Double if d == 0.0 => "0.0"
+      case x => String.valueOf(x)
+    }
+    for (trial <- 0 until 24) {
+      val keys = rnd.shuffle(Seq("k", "d", "s")).take(1 + rnd.nextInt(3))
+      val order = keys.map { k =>
+        (rnd.nextBoolean(), rnd.nextBoolean()) match {
+          case (true, true) => col(k).asc_nulls_first
+          case (true, false) => col(k).asc_nulls_last
+          case (false, true) => col(k).desc_nulls_first
+          case (false, false) => col(k).desc_nulls_last
+        }
+      }
+      val total = rnd.nextBoolean()
+      val full = if (total) order :+ col("id").asc else order
+      assert(single(on, full) && !single(off, full), s"trial $trial: the strategy did not fire")
+      val got = on.read.parquet(dir).orderBy(full: _*).collect().toSeq
+      val want = off.read.parquet(dir).orderBy(full: _*).collect().toSeq
+      if (total) assert(got == want, s"trial $trial ($full): row sequence differs")
+      else {
+        def keyed(rs: Seq[Row]) = rs.map(r => keys.map(k => key(r.get(r.fieldIndex(k)))))
+        assert(keyed(got) == keyed(want), s"trial $trial ($full): key sequence differs")
+        assert(got.map(_.getLong(0)).sorted == want.map(_.getLong(0)).sorted)
+      }
+    }
+  }
 }
