@@ -368,7 +368,7 @@ object Bench {
       .groupBy("n_regionkey").count().collect()
     // Warm the native cosine kernels on tiny synthetic vectors (40k
     // pair evaluations — enough for C2 to compile the inner loops).
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     import org.apache.spark.sql.functions.{broadcast, collect_list, lit}
     val v = spark.range(200).selectExpr("id",
       "transform(sequence(0, 15), i -> cast((id * 31 + i) % 97 as float) / 97) as embedding")

@@ -16,33 +16,8 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * repeated calls within one session.
   */
 object Tables {
-  // Keyed by SESSION identity, not applicationId: a DataFrame is bound
-  // to the session that created it, and a cloned session (e.g. the
-  // bloom query's conf-scoped `newSession()`) planning through a
-  // main-session DataFrame would silently use the main session's SQL
-  // confs. The session key is WEAK (and the cached scans are held
-  // through a WeakReference, since a DataFrame strongly references its
-  // session) so a long-lived process that mints scoped clones can drop
-  // them: once a session is unreachable its footer cache is collected
-  // instead of pinned forever (r6 advisory). The SCHEMA is held
-  // strongly next to the weak DataFrame (a StructType references no
-  // session, so it can't pin the key): a collected entry rebuilds the
-  // scan with the cached explicit schema — no footer re-read, no
-  // "parquet at" inference job. (r14: the former schema-less rebuild
-  // launched a footer-inference job at GC-dependent moments, which the
-  // PreparedSuite repeat-build-silence pin flagged on ~40 queries.)
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        (StructType, java.lang.ref.WeakReference[DataFrame])]]())
-
-  private def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // Write timestamps as µs (not legacy INT96 nanos) so dumped results
-    // carry the same physical type the DuckDB oracle produces.
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    graft.plans.PlannerExtensions.install(spark)
+  private def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     readCached(spark, s"$sfDir/$name.parquet")
-  }
 
   /** Cached parquet scan of a path, keyed on the path: the corpus
     * tables ([[load]]) and the fit-once checkpoint READ-BACKS (dim
@@ -50,16 +25,17 @@ object Tables {
     * `spark.read.parquet` re-infers the schema on every build, and
     * that is a footer-reading Spark job per invocation — a fixed
     * per-build cost the prepared path hides and a fresh-build caller
-    * pays for nothing. */
+    * pays for nothing. The cache lives in the session's
+    * [[GraftSession]] record, so the first load also installs graft
+    * into the session. */
   private[graft] def readCached(spark: SparkSession, path: String): DataFrame = {
-    val perSession = cache.computeIfAbsent(spark,
-      _ => scala.collection.concurrent.TrieMap.empty)
+    val scans = GraftSession(spark).scans
     def scan(schema: Option[StructType]): DataFrame = {
       val df = schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
-      perSession.update(path, (df.schema, new java.lang.ref.WeakReference(df)))
+      scans.update(path, (df.schema, new java.lang.ref.WeakReference(df)))
       df
     }
-    perSession.get(path) match {
+    scans.get(path) match {
       case Some((schema, ref)) => Option(ref.get).getOrElse(scan(Some(schema)))
       case None => scan(None)
     }

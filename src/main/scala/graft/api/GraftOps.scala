@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,9 +15,9 @@ import org.apache.spark.sql.functions._
   * All operators preserve the repo's scale discipline: keyed shuffles
   * and broadcasts only, no driver-side collections, no cartesian
   * products, deterministic outputs (see SURVEY §7.4 / NOTES.md).
-  * Every sketch/vector operator registers the native
-  * [[graft.functions.VectorExprs]] expressions on its input's session
-  * itself (registration is idempotent) — no setup call is required.
+  * Every sketch/vector operator, and `topKPerKey`, reaches its input
+  * session's [[graft.GraftSession]] record first, which installs graft
+  * into that session once — no setup call is required.
   *
   * Internal helper columns are prefixed `_graft_` and dropped before
   * returning, so inputs carrying ordinary names like `rn`, `cnt`, `h`
@@ -63,7 +64,7 @@ object GraftOps {
     * executor CPU inside StringSplit/ArrayAggregate/Ascii eval). */
   def fingerprintDedup(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     df.select(col(idCol).as("doc_id"),
         expr(s"graft_rollhash($textCol, 31)").as("fp"))
       .groupBy(col("fp"))
@@ -77,7 +78,7 @@ object GraftOps {
     * (PropertySuite pins bit-equality with the interpreted HOF
     * formula the oracle evaluates) — linear per-row work. */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     df.select(col(idCol).as("doc_id"),
         expr(s"graft_simhash62($textCol)").as("_graft_sh"))
       .select(col("doc_id"),
@@ -180,7 +181,7 @@ object GraftOps {
     * shape of the MinHash-LSH pipeline. */
   def wordShingles(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     df.withColumn("hs", expr(s"graft_wordshingle_hashes($textCol, $n)"))
       .filter(size(col("hs")) > 0)
       .select(col(idCol).as("doc_id"), col("hs"))
@@ -189,7 +190,7 @@ object GraftOps {
   /** Hashed character-n-gram sets (`doc_id`, `hs`). */
   def charGrams(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     df.filter(length(col(textCol)) >= n)
       .select(col(idCol).as("doc_id"),
         expr(s"graft_chargram_hashes($textCol, $n)").as("hs"))
@@ -200,7 +201,7 @@ object GraftOps {
     * verification on candidates only — never all-pairs. Output
     * (x, y, c, na, nb, j) with x < y and j >= thr. */
   def nearDupPairs(hashed: DataFrame, thr: Double): DataFrame = {
-    graft.functions.VectorExprs.register(hashed.sparkSession)
+    GraftSession(hashed.sparkSession)
     graft.llm.Dedup.lshJaccard(hashed, thr)
   }
 
@@ -225,7 +226,7 @@ object GraftOps {
     * one-pass shingle hasher; per-row work, linear. */
   def repetitionRatio(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     // Token count as #spaces + 1 via a length difference (two byte
     // scans, one allocation) — the token ARRAY was built here purely
     // to read its size, once in the filter and once in the projection.
@@ -484,7 +485,7 @@ object GraftOps {
       throw new IllegalArgumentException(
         s"marker model for language '${p._1}' contains duplicate tokens")
     }
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     val m = model.sortBy(_._1) // lang-sorted ⇒ argmax ties break alphabetically
     val langsLit = typedlit(m.map(_._1))
     df.select(col(idCol), col(textCol).as("_graft_t"),
@@ -531,7 +532,7 @@ object GraftOps {
       !expr(s"exists($vecCol, x -> x IS NULL)"))
 
   def packVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     scorableVecs(df, idCol, vecCol)
       .select(struct(col(idCol).cast("long").as("vec_id"),
         sqrt(expr(s"graft_dot($vecCol, $vecCol)")).as("nrm"),
@@ -563,7 +564,7 @@ object GraftOps {
   /** Random-hyperplane LSH bucket ids — the beyond-broadcast scale
     * path: equi-join on the bucket, pair-search within buckets. */
   def lshBuckets(df: DataFrame, vecCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     df.withColumn("bucket", expr(s"graft_rademacher_bucket($vecCol)"))
   }
 
@@ -586,7 +587,7 @@ object GraftOps {
     * join or keyed shuffle; fully deterministic (see llm_ann_ivf). */
   def ivfFit(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     graft.llm.Ann.kmeansFit(vecContract(df, idCol, vecCol), k, iters)
   }
 
@@ -596,7 +597,7 @@ object GraftOps {
     * `cell` — quadratic only within cells, never across the corpus. */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, probes: Int): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+    GraftSession(df.sparkSession)
     graft.llm.Ann.assign(vecContract(df, idCol, vecCol), centroids, probes)
       .select(col("vec_id").as(idCol), col("cell"))
   }
@@ -776,11 +777,11 @@ object GraftOps {
     * plan's full per-partition sort (the spill shape at scale). Rows
     * rank by `orderCol` DESC with `tieCol` ASC making the order total,
     * so output and ranks are deterministic. Appends a `rn` rank
-    * column. Installs the planner extensions on first use. */
+    * column. Installs graft, this strategy among it, on first use. */
   def topKPerKey(df: DataFrame, keyCols: Seq[String], orderCol: String,
       tieCol: String, k: Int): DataFrame = {
     val spark = df.sparkSession
-    graft.plans.PlannerExtensions.install(spark)
+    GraftSession(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String) = analyzed.output
       .find(_.name == n)

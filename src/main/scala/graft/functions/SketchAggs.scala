@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -133,20 +132,17 @@ object SketchAggs {
     }
   }
 
-  /** Register `graft_misra_gries(item, k)` (k a literal int) as a SQL
-    * temp function; analysis wraps the returned AggregateFunction in a
-    * Complete AggregateExpression like any built-in aggregate. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_misra_gries",
-      exprs => MisraGriesTopK(
-        exprs(0),
-        exprs(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_misra_gries: k must be a literal int, got $other")
-        }),
-      "built-in")
-  }
+  /** `graft_misra_gries(item, k)` (k a literal int), registered with
+    * the other graft functions by [[graft.GraftSession]]; analysis wraps
+    * the returned AggregateFunction in a Complete AggregateExpression
+    * like any built-in aggregate. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_misra_gries" -> (exprs => MisraGriesTopK(
+      exprs(0),
+      exprs(1).eval(null) match {
+        case i: Int => i
+        case l: Long => l.toInt
+        case other => throw new IllegalArgumentException(
+          s"graft_misra_gries: k must be a literal int, got $other")
+      })))
 }

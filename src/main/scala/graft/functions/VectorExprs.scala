@@ -980,10 +980,15 @@ object VectorExprs {
         c: IndexedSeq[Expression]): Expression = copy(c)
   }
 
-  /** Name → builder for every native expression — the single source
-    * both [[register]] (per-session temp functions) and
-    * [[graft.GraftExtensions]] (spark.sql.extensions injection)
-    * register from. */
+  /** Name → builder for every native expression, part of the one
+    * function list ([[graft.GraftSession.functions]]) that the
+    * per-session install and [[graft.GraftExtensions]] register.
+    *
+    * Constraint on the cosine kernels: the 3rd argument (the packed
+    * vector table) MUST be a single broadcast constant per query — the
+    * per-thread decode cache is keyed on full (id, nrm) content, so a
+    * genuinely varying pack still evaluates correctly but decodes per
+    * row (quadratic decode cost, not wrong answers). */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_dot" -> (exprs => FloatDot(exprs(0), exprs(1))),
     "graft_ddot" -> (exprs => DoubleDot(exprs(0), exprs(1))),
@@ -1001,35 +1006,6 @@ object VectorExprs {
     "graft_marker_hits" -> (exprs => MarkerHits(exprs(0), exprs(1)))
   )
 
-  /** Register as SQL temp functions (idempotent, per session).
-    *
-    * Constraint on the cosine kernels: the 3rd argument (the packed
-    * vector table) MUST be a single broadcast constant per query — the
-    * per-thread decode cache is keyed on full (id, nrm) content, so a
-    * genuinely varying pack still evaluates correctly but decodes per
-    * row (quadratic decode cost, not wrong answers). */
-  /** Registries this library has already filled, keyed on the registry
-    * object itself (weak: a dropped session's entry goes with it). */
-  private val registered = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, java.lang.Boolean]())
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // One unconditional create-or-REPLACE pass per session (ADVICE
-    // r12): the former skip-if-present guard silenced the 'function
-    // replaced' WARN noise but would silently KEEP a foreign
-    // pre-registered graft_* function, running operators against an
-    // implementation that isn't ours. Replacing on the session's first
-    // touch guarantees native semantics (at most one WARN per name per
-    // session — fired exactly when a foreign builder is displaced,
-    // which deserves the log line); later calls skip entirely.
-    // computeIfAbsent on the synchronized map runs the fill once and
-    // blocks racing callers until the registry is fully populated.
-    registered.computeIfAbsent(reg, _ => {
-      builders.foreach { case (name, b) =>
-        reg.createOrReplaceTempFunction(name, b, "built-in") }
-      java.lang.Boolean.TRUE
-    })
-    ()
-  }
+  /** Installs graft into `spark`: the same as `graft.GraftSession(spark)`. */
+  def register(spark: SparkSession): Unit = graft.GraftSession(spark): Unit
 }

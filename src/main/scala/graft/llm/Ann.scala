@@ -45,7 +45,6 @@ object Ann {
     * each row checks all forward partners in one tight loop instead of
     * materializing n² joined rows. */
   def cosNearDup(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     // One parquet file → one split; spread the kernel across cores.
     graft.api.GraftOps.cosineNearDup(
         Tables.embeddings(spark, sf)
@@ -100,7 +99,6 @@ object Ann {
     * expression (same integer-arithmetic planes as the oracle, one
     * pass per row instead of 6×64 interpreted lambdas). */
   def annLsh(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val e = Tables.embeddings(spark, sf)
       .withColumn("bucket", expr("graft_rademacher_bucket(embedding)"))
       .withColumn("nrm", sqrt(dot("embedding", "embedding")))
@@ -259,7 +257,6 @@ object Ann {
     * and queried many times. */
   private def trainedAssignment(spark: SparkSession, sf: String,
       top: Int): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     graft.FitOnce.checkpoint(spark, sf, s"Ann.assigned.$top", "graft_ivf_", "assigned")(
       assign(vecFrame(spark, sf), trainedCentroids(spark, sf), top)
         .withColumn("nrm", sqrt(dot("embedding", "embedding"))))
@@ -492,7 +489,6 @@ object Ann {
   /** Fit-once checkpoint of (codebooks, codes), per (session, sf) —
     * the same persisted-index discipline as [[trainedAssignment]]. */
   private def pqIndex(spark: SparkSession, sf: String): (DataFrame, DataFrame) = {
-    graft.functions.VectorExprs.register(spark)
     val (bp, cp) = graft.FitOnce.scratch(spark, sf, "Ann.pq", "graft_pq_") { dir =>
       val books = dir.resolve("books").toString
       val codes = dir.resolve("codes").toString

@@ -113,7 +113,6 @@ object Dedup {
     * all-pairs oracle, at a fraction of the cost.
     */
   def nearDedup(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     // Native one-pass word-3-gram shingle hashing (no shingle strings
     // materialized); counts equal the distinct string-shingle sets
     // (pinned by PropertySuite's shingle-count parity test).
@@ -149,7 +148,6 @@ object Dedup {
     * where word shingles are not. Probed on this corpus: exactly the
     * 25 planted near-dup pairs clear J >= 0.9, background < 0.12. */
   def ngramJaccard(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     lshJaccard(charGrams(spark, sf), 0.9,
       bandsExpr = expr("graft_bands_from_slots(sl)"))
   }
@@ -385,7 +383,6 @@ object Dedup {
     * computation — it IS the LSH benchmark entry. */
   private def nearDupPairs(spark: SparkSession, sf: String): DataFrame =
     graft.FitOnce.checkpoint(spark, sf, "Dedup.pairs", "graft_pairs_", "pairs") {
-      graft.functions.VectorExprs.register(spark)
       nearDedup(spark, sf)
         .select(col("x"), col("y"), col("c"), col("na"), col("nb"))
     }
@@ -495,7 +492,6 @@ object Dedup {
     * |est − J| ≤ 0.25 that the oracle asserts as literal TRUE — a
     * drifting estimator hash-fails the round. */
   def minhashEst(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     // ONE O(K·n) sketch pass: slots computed once, bands derived from
     // them by the cheap 64-element fold (BandsFromSlots); the slot
     // table is the shared word-shingle artifact ([[word3Slots]]).

@@ -29,7 +29,6 @@ object Similarity {
     * beyond which llm_ann_lsh is the scale path. Joined on a constant
     * key so the plan is a BroadcastHashJoin, never a nested loop. */
   private[graft] def packedVectors(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     graft.api.GraftOps.packVectors(
       Tables.embeddings(spark, sf), "vec_id", "embedding")
   }
@@ -41,7 +40,6 @@ object Similarity {
     * provably the global top-10 (see CosTopK). No n²-row
     * materialization, no BroadcastNestedLoopJoin. */
   def knnCosine(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     // One parquet file → one split; spread the kernel across cores.
     graft.api.GraftOps.cosineTopK(
         Tables.embeddings(spark, sf)
@@ -55,7 +53,6 @@ object Similarity {
   /** k-NN of one query vector (vec_id 0): top-3 per label. The query
     * row is a 1-row broadcast — no driver-side collect. */
   def knnQuery(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val e = withNorm(Tables.embeddings(spark, sf))
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"), col("nrm").as("qn"))
@@ -79,7 +76,6 @@ object Similarity {
     * batch size scales the work linearly and the whole thing is one
     * narrow stage. */
   def knnBatch(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 10)
       .withColumn("_graft_j", lit(0))

@@ -343,7 +343,6 @@ object Aggregates {
     * true − n/(k+1) ≤ est ≤ true, checked in exact integers
     * (with k = 2: 3·est ≥ 3·cnt − n). */
   def aggHeavyHitters(spark: SparkSession, sf: String): DataFrame = {
-    graft.functions.SketchAggs.register(spark)
     val langs = Tables.documents(spark, sf).select(col("lang"))
     val sk = langs.agg(expr("graft_misra_gries(lang, 2)").as("mg"),
       count(lit(1)).as("n"))

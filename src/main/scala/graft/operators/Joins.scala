@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.Tables.{dec, rate, tsLit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -373,23 +373,6 @@ object Joins {
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-  /** Set/restore SQL confs around `f`. NOTE: this mutates the GIVEN
-    * session's conf for the duration of `f` — any query planned
-    * concurrently on the same session inherits the overrides. The
-    * scored bloom query therefore runs on a cloned session
-    * (`spark.newSession()` in [[joinBloomPrune]]) so the shared
-    * session's confs are never touched; this helper remains for
-    * single-threaded contexts (PlanSuite's plan pinning). */
-  private[graft] def withConfs[T](spark: SparkSession,
-      kv: Seq[(String, String)])(f: => T): T = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** The join under the bloom runtime filter: lineitem ⋈ the urgent
     * orders, revenue-profiled per return flag. Catalyst's
     * InjectRuntimeFilter plants `might_contain(bloom(o_orderkey))` on
@@ -412,21 +395,6 @@ object Joins {
       .orderBy("l_returnflag")
   }
 
-  /** One conf-scoped clone per PARENT SESSION, memoized: repeated
-    * bench / verify invocations must not mint a fresh session (plus
-    * its Tables cache entries) per call — the r6 unbounded-growth
-    * advisory. Keyed on the parent session REFERENCE, not
-    * applicationId (r14 advice): two sessions sharing one SparkContext
-    * would otherwise share a single clone built from the FIRST
-    * caller's `newSession()`, so the second session's bloom query
-    * would run under the first session's inherited conf (bloom confs
-    * are explicit, but e.g. timezone is inherited). The key is weak
-    * and the clone holds no reference to its parent, so a discarded
-    * parent session's entry is collectable (Collections.synchronizedMap
-    * makes computeIfAbsent atomic under the map's single lock). */
-  private val scopedSessionCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, SparkSession]())
-
   /** Scored wrapper. The returned DataFrame is deliberately BOUND to
     * the conf-scoped clone: a Dataset optimizes and executes under the
     * session that built it, the clone's bloom/broadcast overrides are
@@ -442,12 +410,14 @@ object Joins {
     // Cloned session: shares the SparkContext (and so the scratch
     // state) but owns its SQL conf — the bloom/broadcast overrides
     // can never leak into a query planned concurrently on the shared
-    // session (r5 advisory).
-    val scoped = scopedSessionCache.computeIfAbsent(spark, parent => {
-      val s = parent.newSession()
+    // session (r5 advisory). One clone per parent session, kept in the
+    // parent's GraftSession record, so repeat builds never mint a fresh
+    // session (plus its scan cache) per call.
+    val scoped = GraftSession(spark).bloomSession {
+      val s = spark.newSession()
       bloomConfs.foreach { case (k, v) => s.conf.set(k, v) }
       s
-    })
+    }
     bloomJoinPlan(scoped, sf).orderBy("l_returnflag")
   }
 

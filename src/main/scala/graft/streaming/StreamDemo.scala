@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession.withConfs
 import graft.Tables.ntz
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,37 +54,22 @@ object StreamDemo {
     * with real state volume sets spark.sql.shuffle.partitions to
     * match before starting — the same sizing exercise, different
     * value. */
-  private val StateParts = "4"
+  private val StateConfs = Seq("spark.sql.shuffle.partitions" -> "4")
 
-  private def withStateParts[T](spark: SparkSession)(f: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StateParts)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Additionally skip the trailing NO-DATA microbatch — legal ONLY for
-    * queries whose every output row is emitted in the batch that
-    * produced it (stream-stream inner join matches, within-watermark
-    * dedup survivors, foreachBatch merges): for those the extra batch
-    * exists to evict state a terminating AvailableNow run is about to
-    * discard anyway, yet it still pays full state-store commit + sink
-    * coordination (trigger-level durations: 0.3–0.7 s per no-data
-    * batch; the wall-clock win per invocation is smaller because
+  /** [[StateConfs]], and also skip the trailing NO-DATA microbatch —
+    * legal ONLY for queries whose every output row is emitted in the
+    * batch that produced it (stream-stream inner join matches,
+    * within-watermark dedup survivors, foreachBatch merges): for those
+    * the extra batch exists to evict state a terminating AvailableNow
+    * run is about to discard anyway, yet it still pays full state-store
+    * commit + sink coordination (trigger-level durations: 0.3–0.7 s per
+    * no-data batch; the wall-clock win per invocation is smaller because
     * stream start/teardown overlaps it — measured one fewer microbatch
     * per run, same results). Watermark-FLUSHED shapes (append-mode
     * windows/sessions) MUST keep it — their closed windows are emitted
-    * by exactly that batch — so they stay on [[withStateParts]]. */
-  private def withStatePartsNoFlush[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    // Spark's documented default — conf.get(key) without it can throw on
-    // builds where the key has no session-visible default, which would
-    // also mask the body's own exception if the get sat outside the try.
-    val prev = spark.conf.get(key, "true")
-    try {
-      spark.conf.set(key, "false")
-      withStateParts(spark)(f)
-    } finally spark.conf.set(key, prev)
-  }
+    * by exactly that batch — so they stay on [[StateConfs]]. */
+  private val NoFlushConfs =
+    StateConfs :+ ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
   /** Streaming source over the corpus events table, resolving BOTH
     * physical layouts: the driver corpus ships events as a single
@@ -136,7 +122,7 @@ object StreamDemo {
       .agg(count(lit(1)).as("cnt"))
       .select(ntz(col("window.start")).as("hour_start"),
         col("event_type"), col("cnt"))
-    withStatePartsNoFlush(spark) {
+    withConfs(spark, NoFlushConfs) {
       val q = agg
         .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("overwrite").parquet(out); () }
@@ -201,7 +187,7 @@ object StreamDemo {
     val dir = streamRoot(spark, sf, "ev_append")
     val out = dir.resolve("out").toString
     val ckpt = dir.resolve("ckpt").toString
-    withStateParts(spark) {
+    withConfs(spark, StateConfs) {
       val q = appendAgg(spark, sf)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
@@ -224,7 +210,7 @@ object StreamDemo {
     val dir = streamRoot(spark, sf, "ev_sess")
     val out = dir.resolve("out").toString
     val ckpt = dir.resolve("ckpt").toString
-    withStateParts(spark) {
+    withConfs(spark, StateConfs) {
       val q = eventsStream(spark, sf, schema)
         .withColumn("ts2", timestamp_micros(graft.Tables.tsUsExpr(schema)))
         .withWatermark("ts2", "10 minutes")
@@ -313,7 +299,7 @@ object StreamDemo {
       closed.sortBy(_.firstUs).iterator.map(s =>
         SessRow(key, tsFromUs(s.firstUs), tsFromUs(s.lastUs + GapUs), s.cnt))
     }
-    withStateParts(spark) {
+    withConfs(spark, StateConfs) {
       val src = eventsStream(spark, sf, schema)
         .withColumn("ts2", timestamp_micros(graft.Tables.tsUsExpr(schema)))
         .withWatermark("ts2", "10 minutes")
@@ -374,7 +360,7 @@ object StreamDemo {
     val dir = streamRoot(spark, sf, "ev_join")
     val out = dir.resolve("out").toString
     val ckpt = dir.resolve("ckpt").toString
-    withStatePartsNoFlush(spark) {
+    withConfs(spark, NoFlushConfs) {
       val q = joinedStreams(spark, sf)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
@@ -408,7 +394,7 @@ object StreamDemo {
         .withWatermark("ts2", "10 minutes")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts2"))
-    withStatePartsNoFlush(spark) {
+    withConfs(spark, NoFlushConfs) {
       val q = src().union(src())
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -445,7 +431,7 @@ object StreamDemo {
     val dir = streamRoot(spark, sf, "ev_enrich")
     val out = dir.resolve("out").toString
     val ckpt = dir.resolve("ckpt").toString
-    withStateParts(spark) {
+    withConfs(spark, StateConfs) {
       val q = eventsStream(spark, sf, schema)
         .withColumn("ts2", timestamp_micros(graft.Tables.tsUsExpr(schema)))
         .withWatermark("ts2", "10 minutes")
@@ -513,7 +499,7 @@ object StreamDemo {
         .map(_.getName.stripPrefix("state").toInt))
       .filter(_.nonEmpty).map(_.max).getOrElse(-1)
     val gen = new java.util.concurrent.atomic.AtomicInteger(priorGen)
-    withStatePartsNoFlush(spark) {
+    withConfs(spark, NoFlushConfs) {
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "4").parquet(src)
         .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>

@@ -10,7 +10,6 @@ object PqProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = graft.Bench.session("32")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.VectorExprs.register(spark)
     graft.llm.Ann.pqAdcRanks(spark, sfDir).show(50, truncate = false)
     spark.stop()
   }

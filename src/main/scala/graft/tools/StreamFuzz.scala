@@ -157,14 +157,12 @@ object StreamFuzz {
       streamed: DataFrame): DataFrame = {
     val root = s"$dir/_stream_scratch/$name"
     val out = s"$root/out"; val ckpt = s"$root/ckpt"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = streamed.writeStream.format("parquet").option("path", out)
+    graft.GraftSession.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> "4")) {
+      streamed.writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        .awaitTermination()
+    }
     val parts = new java.io.File(out).listFiles()
     val hasOutput = parts != null && parts.exists(f =>
       f.getName.startsWith("part-") && f.length > 0)

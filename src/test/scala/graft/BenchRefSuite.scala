@@ -465,6 +465,33 @@ class BenchRefSuite extends AnyFunSuite {
       "list each in README §Running (or the verify skill), or delete it")
   }
 
+  test("only GraftSession registers functions, installs planner extensions or keys a weak map on a session") {
+    // One place where graft meets a SparkSession: a second install
+    // path or session cache outside it is how the copies drifted apart.
+    def read(f: java.io.File): String =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val owner = "GraftSession.scala"
+    val banned = Seq(
+      "createOrReplaceTempFunction".r,
+      """\.extra(Strategies|Optimizations)\s*(\+\+|:\+|\+)?=(?!=)""".r,
+      """WeakHashMap\s*\[\s*(org\.apache\.spark\.sql\.)?SparkSession\b""".r)
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) files(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val all = files(new java.io.File("src/main"))
+    val (own, rest) = all.partition(_.getName == owner)
+    assert(own.size == 1, s"expected exactly one $owner under src/main")
+    banned.foreach(re => assert(re.findFirstIn(read(own.head)).isDefined,
+      s"$owner no longer matches /$re/: the guard would pass vacuously"))
+    val offenders = for {
+      f <- rest
+      (line, i) <- read(f).split("\n").zipWithIndex
+      re <- banned
+      if re.findFirstIn(line).isDefined
+    } yield s"${f.getPath}:${i + 1}: $line"
+    assert(offenders.isEmpty, "session setup or a session-keyed weak map outside " +
+      s"$owner:\n${offenders.mkString("\n")}")
+  }
+
   test("overRef needs BOTH >1.5x relative AND >80ms absolute") {
     val ref = Map("big" -> 1.0, "small" -> 0.04)
     assert(Bench.overRef(ref, "big", 1.6))       // 1.6x and +0.6 s

@@ -35,7 +35,7 @@ class DeterminismSuite extends SparkTestBase {
     "fn_hash")            // hash family raw values
 
   private def assertSameRows(label: String, alt: org.apache.spark.sql.SparkSession): Unit = {
-    graft.functions.VectorExprs.register(alt)
+    GraftSession(alt)
     for (name <- sample) {
       val base = SparkEntry.queries(name)(spark, sf).collect()
       val other = SparkEntry.queries(name)(alt, sf).collect()

@@ -375,7 +375,7 @@ class EdgeCaseSuite extends SparkTestBase {
   test("marker kernel: analysis-time shape errors, alternating models, bounded cache") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr, when}
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     // Wrong multiplier type fails at ANALYSIS (was a ClassCastException
     // at execution, r16 advice).
     intercept[org.apache.spark.sql.AnalysisException] {

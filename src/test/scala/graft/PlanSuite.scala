@@ -501,7 +501,7 @@ class PlanSuite extends SparkTestBase {
   }
 
   test("bloom runtime filter lands on the fact scan") {
-    val p = operators.Joins.withConfs(spark, operators.Joins.bloomConfs) {
+    val p = GraftSession.withConfs(spark, operators.Joins.bloomConfs) {
       plan(operators.Joins.bloomJoinPlan(spark, sf01))
     }
     assert(p.contains("might_contain"),
@@ -901,8 +901,8 @@ class PlanSuite extends SparkTestBase {
         .orderBy("a", "c")
       assert(s2.experimental.extraOptimizations.isEmpty)
       assert(fired(shape) == 1, "the extension (pre-CBO) path alone must fire")
-      plans.PlannerExtensions.install(s2)
-      plans.PlannerExtensions.install(s2)
+      GraftSession(s2)
+      GraftSession(s2)
       assert(s2.experimental.extraOptimizations ==
         plans.PlannerExtensions.Rules, "install must be idempotent")
       val opt = shape.queryExecution.optimizedPlan
@@ -970,8 +970,8 @@ class PlanSuite extends SparkTestBase {
       assert(s2.experimental.extraOptimizations.isEmpty)
       assert(jsonExprs(shape.queryExecution.optimizedPlan) == ((1, 0)),
         "the extension (pre-CBO) path alone must fire")
-      plans.PlannerExtensions.install(s2)
-      plans.PlannerExtensions.install(s2)
+      GraftSession(s2)
+      GraftSession(s2)
       assert(s2.experimental.extraOptimizations == plans.PlannerExtensions.Rules)
       val opt = shape.queryExecution.optimizedPlan
       assert(jsonExprs(opt) == ((1, 0)), s"both paths active:\n$opt")
@@ -989,8 +989,26 @@ class PlanSuite extends SparkTestBase {
   // (graft.plans.PlannerExtensions, graft.plans.SampleFreeSort)
   // ------------------------------------------------------------------
 
-  test("install twice leaves each strategy and rule once; inject registers the same strategies") {
+  /** The graft_* names in `s`'s function registry. */
+  private def graftFunctions(s: org.apache.spark.sql.SparkSession): Set[String] =
+    s.sessionState.functionRegistry.listFunction().map(_.funcName)
+      .filter(_.startsWith("graft_")).toSet
+
+  test("the session record installs once; inject registers the same strategies and functions") {
     import org.apache.spark.sql.SparkSession
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val fresh = spark.newSession()
+    assert(fresh.conf.get(tsKey) != "TIMESTAMP_MICROS")
+    assert(graftFunctions(fresh).isEmpty)
+    val rec = GraftSession(fresh)
+    assert(GraftSession(fresh) eq rec, "a second call must return the same record")
+    assert(fresh.experimental.extraStrategies == plans.PlannerExtensions.Strategies)
+    assert(fresh.experimental.extraOptimizations == plans.PlannerExtensions.Rules)
+    assert(fresh.conf.get(tsKey) == "TIMESTAMP_MICROS")
+    val installed = graftFunctions(fresh)
+    assert(installed == GraftSession.functions.map(_._1).toSet)
+    assert(installed.contains("graft_misra_gries") && installed.contains("graft_dot"))
+
     val prev = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -1000,14 +1018,25 @@ class PlanSuite extends SparkTestBase {
       assert(s2 ne prev, "expected a fresh session over the shared context")
       assert(s2.sessionState.planner.extraPlanningStrategies ==
         plans.PlannerExtensions.Strategies, "inject must register every strategy once")
-      plans.PlannerExtensions.install(s2)
-      plans.PlannerExtensions.install(s2)
+      assert(graftFunctions(s2) == installed,
+        "inject must register every function the per-session install registers")
+      GraftSession(s2)
+      GraftSession(s2)
       assert(s2.experimental.extraStrategies == plans.PlannerExtensions.Strategies)
       assert(s2.experimental.extraOptimizations == plans.PlannerExtensions.Rules)
     } finally {
       SparkSession.setActiveSession(prev)
       SparkSession.setDefaultSession(prev)
     }
+  }
+
+  test("a GraftOps call with no table load installs the planner extensions") {
+    val s = spark.newSession()
+    assert(s.experimental.extraStrategies.isEmpty)
+    val docs = s.range(0, 4).selectExpr("id", "concat('a b c ', id) AS text")
+    assert(api.GraftOps.simhash(docs, "id", "text").count() == 4)
+    assert(s.experimental.extraStrategies == plans.PlannerExtensions.Strategies)
+    assert(s.experimental.extraOptimizations == plans.PlannerExtensions.Rules)
   }
 
   import org.apache.spark.sql.SparkSession
@@ -1017,7 +1046,7 @@ class PlanSuite extends SparkTestBase {
     * extensions installed and `confs` set. */
   private def sibling(confs: (String, String)*): SparkSession = {
     val s = spark.newSession()
-    plans.PlannerExtensions.install(s)
+    GraftSession(s)
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     s
   }

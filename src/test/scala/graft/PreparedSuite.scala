@@ -38,7 +38,7 @@ class PreparedSuite extends SparkTestBase {
     // would hand it a DataFrame bound to the ORIGINAL session, whose
     // actions then run under that session's conf (r13 advice, medium).
     val s2 = spark.newSession()
-    graft.functions.VectorExprs.register(s2)
+    GraftSession(s2)
     val a = api.Prepared.df(spark, sf, "agg_q1_pricing")
     val b = api.Prepared.df(s2, sf, "agg_q1_pricing")
     assert(!(a eq b), "prepared cache conflated sessions sharing a context")
@@ -51,12 +51,13 @@ class PreparedSuite extends SparkTestBase {
     // JVM's lifetime — correct for the bench/verify processes, but a
     // long-lived host minting `newSession()` per request (the serving
     // pattern the API documents) would accumulate one stratum per
-    // session forever. Same weak-key/weak-value discipline as
-    // Tables.cache; this pins that a session used ONLY through the
-    // prepared surface becomes unreachable once the caller drops it.
+    // session forever. The GraftSession record holds the scan cache
+    // and the prepared plans weakly; this pins that a session used
+    // ONLY through the prepared surface becomes unreachable once the
+    // caller drops it.
     def mint(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
       val s = spark.newSession()
-      graft.functions.VectorExprs.register(s)
+      GraftSession(s)
       api.Prepared.df(s, sf, "agg_q1_pricing")
       new java.lang.ref.WeakReference(s)
     }
@@ -86,7 +87,7 @@ class PreparedSuite extends SparkTestBase {
     // cache fixed. Two parents must get two clones, each a child of
     // its own parent's context but a distinct session.
     val s2 = spark.newSession()
-    graft.functions.VectorExprs.register(s2)
+    GraftSession(s2)
     val d1 = operators.Joins.joinBloomPrune(spark, sf)
     val d2 = operators.Joins.joinBloomPrune(s2, sf)
     assert(!(d1.sparkSession eq d2.sparkSession),

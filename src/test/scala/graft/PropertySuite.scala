@@ -75,7 +75,7 @@ class PropertySuite extends SparkTestBase {
   }
 
   test("packed cosine kernel equals scala brute force on random vectors") {
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val rnd = new scala.util.Random(42)
     val n = 60
     val dim = 8
@@ -110,7 +110,7 @@ class PropertySuite extends SparkTestBase {
   test("native char-gram hash count equals distinct substring count") {
     // Pins the byte-gram ≡ char-gram assumption (pure-ASCII corpus) and
     // collision-freeness of the one-pass hasher on real data.
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val bad = Tables.documents(spark, sf)
       .filter(length(col("text")) >= 8)
       .select(
@@ -168,7 +168,7 @@ class PropertySuite extends SparkTestBase {
   }
 
   test("native word-shingle hash count equals distinct shingle count") {
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val bad = Tables.documents(spark, sf)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
@@ -182,7 +182,7 @@ class PropertySuite extends SparkTestBase {
   }
 
   test("native expression edge cases: short inputs, k > n, empty sets") {
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val r = spark.sql(
       "SELECT size(graft_chargram_hashes('abc', 8)) AS short_gram, " +
         "size(graft_chargram_hashes('abcdefgh', 8)) AS one_gram, " +
@@ -207,7 +207,7 @@ class PropertySuite extends SparkTestBase {
   test("native SimHash62 equals the interpreted HOF bit-majority fold") {
     // The DuckDB oracle evaluates the HOF formula; the Spark side runs
     // the native one-pass expression — they must agree bit-for-bit.
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     def roll(s: String, m: Int) =
       s"aggregate(transform(split($s, ''), c -> cast(ascii(c) as bigint)), " +
         s"cast(0 as bigint), (a, b) -> (a * $m + b) % 2147483647)"
@@ -233,7 +233,7 @@ class PropertySuite extends SparkTestBase {
     // token), leading/double/trailing spaces (interior and trailing
     // empty segments kept — split limit -1 semantics), a token shared
     // by two languages' marker sets, and the empty token AS a marker.
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .unionAll(spark.sql("SELECT CAST(-1 AS BIGINT), ''"))
       .unionAll(spark.sql("SELECT CAST(-2 AS BIGINT), ' the  fox the '"))
@@ -327,7 +327,7 @@ class PropertySuite extends SparkTestBase {
     }
     // And the shipped pruned plan equals the unpruned round-then-
     // filter spec on the corpus (sf0.1 — the SF with surviving pairs).
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val sf1 = sfSibling("sf0.1")
     val e = Tables.embeddings(spark, sf1)
       .withColumn("bucket", expr("graft_rademacher_bucket(embedding)"))
@@ -352,7 +352,7 @@ class PropertySuite extends SparkTestBase {
     // the executable spec the DuckDB oracle also evaluates
     // (list_reduce over ascii(c)). Both multipliers, plus the
     // empty-string seed case.
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val bad = Tables.documents(spark, sf)
       .select(col("text"))
       .unionAll(spark.sql("SELECT '' AS text"))
@@ -376,7 +376,7 @@ class PropertySuite extends SparkTestBase {
     // matches too, re-verified manually with BIGINT accumulators).
     // This pin extends the corpus-ASCII equality test to exactly those
     // classes, and fails loudly if a future Spark reverts ascii().
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     def spec(s: String, mult: Int): Long = {
       var h = 0L; var i = 0
       while (i < s.length) {
@@ -405,7 +405,7 @@ class PropertySuite extends SparkTestBase {
   }
 
   test("native Rademacher bucket equals the interpreted HOF bucket") {
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val bad = Tables.embeddings(spark, sf)
       .select(
         expr("graft_rademacher_bucket(embedding)").as("native"),
@@ -422,7 +422,7 @@ class PropertySuite extends SparkTestBase {
     // correctness ground of llm_ngram_jaccard's ingest-time slots: its
     // candidates come from graft_bands_from_slots over the persisted
     // char8 slot table, claimed bit-identical to graft_minhash_bands.
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val rows = Tables.documents(spark, sf).limit(20)
       .select(
         expr("graft_minhash_slots(graft_wordshingle_hashes(text, 3))").as("sl"),
@@ -441,7 +441,7 @@ class PropertySuite extends SparkTestBase {
   }
 
   test("native DoubleDot equals the interpreted aggregate/zip_with fold bit-for-bit") {
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val bad = Tables.embeddings(spark, sf)
       .withColumn("ed", expr("transform(embedding, x -> cast(x as double))"))
       .crossJoin(Tables.embeddings(spark, sf).limit(3)
@@ -486,7 +486,7 @@ class PropertySuite extends SparkTestBase {
     // bug in the API's column threading would be invisible to the
     // oracle gate — this drives it with foreign names on synthetic
     // rows.
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     import spark.implicits._
     val docs = Seq(
       (100L, "a b c d e f g", "en"), (101L, "a b c d e f g", "en"),
@@ -548,7 +548,7 @@ class PropertySuite extends SparkTestBase {
     assert(samp.count() == 2)
     assert(samp.columns.toSeq == docs.columns.toSeq,
       "sample must return the input schema unchanged")
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     val vecs = Seq(
       (7L, Array(1.0f, 0.0f), 1, Seq(1), 1),
       (8L, Array(1.0f, 0.01f), 1, Seq(1), 1),
@@ -629,7 +629,7 @@ class PropertySuite extends SparkTestBase {
     // Two orthogonal clusters (even ids ~ x-axis, odd ids ~ y-axis);
     // the hash-sampled k=2 init picks vid 0 (even) and vid 13 (odd),
     // so two Lloyd rounds must separate the clusters exactly.
-    graft.functions.VectorExprs.register(spark)
+    GraftSession(spark)
     import spark.implicits._
     val vecs = (0 until 20).map { i =>
       val noise = i * 0.001f
@@ -693,6 +693,9 @@ class PropertySuite extends SparkTestBase {
         .head().getDouble(0)
       assert(d == 6.0)
       assert(s2.sql("SELECT graft_simhash62('a b')").count() == 1)
+      val mg = s2.sql("SELECT graft_misra_gries(x, 2) FROM VALUES ('a'), ('a'), ('b') AS t(x)")
+        .head().getMap[String, Long](0)
+      assert(mg.toMap == Map("a" -> 2L, "b" -> 1L))
     } finally {
       SparkSession.setActiveSession(prev)
       SparkSession.setDefaultSession(prev)
@@ -1011,7 +1014,7 @@ class PropertySuite extends SparkTestBase {
 
   test("misra-gries native aggregate: guarantee holds under many-partition merge") {
     import org.apache.spark.sql.functions._
-    graft.functions.SketchAggs.register(spark)
+    GraftSession(spark)
     // Adversarial mix: 2 true heavies (40% + 25%) over a 100-item cold
     // tail, shuffled across 17 partitions so partial summaries merge in
     // arbitrary order; k = 4 (far smaller than the 102-item domain).
@@ -1318,7 +1321,7 @@ class PropertySuite extends SparkTestBase {
     val dir = Tables.scratchDir("graft_sfs_prop_").resolve("in").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema).write.parquet(dir)
     val on = spark.newSession()
-    plans.PlannerExtensions.install(on)
+    GraftSession(on)
     val off = spark.newSession()
     object aqe extends AdaptiveSparkPlanHelper
     def single(s: SparkSession, order: Seq[Column]): Boolean =
