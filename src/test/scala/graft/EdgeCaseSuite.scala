@@ -461,8 +461,8 @@ class EdgeCaseSuite extends SparkTestBase {
   test("concurrent queries on a shared session match their serial results") {
     // A real deployment multiplexes query threads over one session.
     // This exercises the shared mutable surfaces at once: FitOnce
-    // checkpoint fills, function self-registration, and the lazy
-    // planner-extension install (a check-then-act on
+    // checkpoint fills and the one-time GraftSession install (function
+    // registration and the append to
     // experimental.extraStrategies/extraOptimizations).
     val names = Seq("agg_q1_pricing", "win_topk_native", "llm_ann_ivf",
       "llm_near_dedup", "llm_simhash_neardup", "fn_json", "ev_session",
