@@ -27,37 +27,17 @@ object Bench {
   def fmt3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** Structural JSON sanity scan: every `{`/`[` matched by the right
-    * closer in order, every string terminated (escapes honored). NOT a
-    * full parser — numbers/commas aren't validated — but it rejects
-    * what the endpoints-only check admitted (r14 advice): a file
-    * truncated mid-object then partially rewritten, or with an
-    * unbalanced quote, would have been spliced verbatim into the
-    * artifact line, making the WHOLE scored JSON unparseable. */
-  def jsonBalanced(txt: String): Boolean = {
-    val stack = new StringBuilder
-    var inStr = false; var esc = false; var i = 0
-    while (i < txt.length) {
-      val c = txt.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' | '[' => stack.append(c)
-        case '}' =>
-          if (stack.isEmpty || stack.last != '{') return false
-          stack.setLength(stack.length - 1)
-        case ']' =>
-          if (stack.isEmpty || stack.last != '[') return false
-          stack.setLength(stack.length - 1)
-        case _ => ()
-      }
-      i += 1
-    }
-    stack.isEmpty && !inStr
-  }
+  private val strictJson = new com.fasterxml.jackson.databind.ObjectMapper()
+    .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** True when `txt` is exactly one well-formed JSON value (a strict
+    * Jackson parse; trailing tokens fail). An evidence file truncated
+    * mid-object then partially rewritten, or with an unbalanced quote,
+    * would otherwise be spliced verbatim into the artifact line and
+    * make the WHOLE scored JSON unparseable. */
+  def jsonBalanced(txt: String): Boolean =
+    try !strictJson.readTree(txt).isMissingNode
+    catch { case _: java.io.IOException => false }
 
   /** The committed crossover.json as a single-line JSON value for the
     * artifact, or "null" when absent/garbled. Minification strips
@@ -155,22 +135,14 @@ object Bench {
     * Advisory only — no trigger keys off it (a uniform-drift trigger
     * would mask genuine whole-inventory regressions behind any
     * coincident drift). */
-  def calibKernel(): Double = {
-    def once(): (Double, Long) = {
-      var x = 0x9e3779b97f4a7c15L; var acc = 0L; var i = 0
-      val t0 = System.nanoTime()
-      while (i < 200000000) {
-        x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
-        acc += x * 0x2545f4914f6cdd1dL
-        i += 1
-      }
-      ((System.nanoTime() - t0) / 1e9, acc)
+  def calibKernel(): Double = bestOf3("calibration kernel") { () =>
+    var x = 0x9e3779b97f4a7c15L; var acc = 0L; var i = 0
+    while (i < 200000000) {
+      x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
+      acc += x * 0x2545f4914f6cdd1dL
+      i += 1
     }
-    val warm = once() // JIT warm
-    require(warm._2 != 0L)
-    val runs = Seq(once(), once(), once())
-    require(runs.map(_._2).distinct.size == 1, "calibration kernel nondeterministic")
-    runs.map(_._1).min
+    acc
   }
 
   /** Memory-BANDWIDTH calibration kernel (r19 verdict #2): a STREAM-
@@ -196,20 +168,28 @@ object Bench {
       x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
       b(i) = x; c(i) = x * 0x2545f4914f6cdd1dL; i += 1
     }
-    def once(): (Double, Long) = {
-      val t0 = System.nanoTime()
+    bestOf3("memory calibration kernel") { () =>
       var j = 0
       while (j < n) { a(j) = b(j) + 3L * c(j); j += 1 }
       var acc = 0L; var k = 0
       while (k < n) { acc += a(k); k += 262144 } // 128-sample fold
-      ((System.nanoTime() - t0) / 1e9, acc)
+      acc
     }
-    val warm = once()
-    require(warm._2 != 0L)
-    val runs = Seq(once(), once(), once())
-    require(runs.map(_._2).distinct.size == 1,
-      "memory calibration kernel nondeterministic")
-    runs.map(_._1).min
+  }
+
+  /** The calibration harness: one untimed JIT-warm run, then the best
+    * wall time of 3 timed runs. `run` returns its checksum, which must
+    * be non-zero and equal across the timed runs (no dead-code
+    * elimination, no input dependence). */
+  private def bestOf3(what: String)(run: () => Long): Double = {
+    require(run() != 0L)
+    val timed = Seq.fill(3) {
+      val t0 = System.nanoTime()
+      val sum = run()
+      ((System.nanoTime() - t0) / 1e9, sum)
+    }
+    require(timed.map(_._2).distinct.size == 1, s"$what nondeterministic")
+    timed.map(_._1).min
   }
 
   /** One timed sweep's verdict surface, for the retry decision. */
@@ -354,22 +334,330 @@ object Bench {
     else None
   }
 
+  /** Committed evidence files, read from the working directory. */
+  val RefFile = "bench_ref.json"
+  val CrossoverFile = "crossover.json"
+  val ScalesweepFile = "scalesweep.json"
+
+  /** One timed run of one query: wall seconds, the guest steal jiffies
+    * its window lost (-1 when unreadable), and whether it succeeded. */
+  final case class Sample(sec: Double, steal: Long, ok: Boolean)
+
+  /** A sample is steal-suspect when its window lost more than 25% of
+    * its whole-VM CPU capacity (elapsed × cpus × USER_HZ jiffies) to
+    * the hypervisor — far above the ~4% background the bench host
+    * shows when "quiet", far below the ~100% of a stall burst. The 50-jiffy
+    * floor keeps sub-0.1 s queries from flagging on background noise. */
+  def isSuspect(s: Sample, cpus: Int): Boolean =
+    s.steal >= 0 && s.steal > math.max(50L, (0.25 * s.sec * cpus * 100).toLong)
+
+  /** One full timed sweep and its verdict. `samples` keeps every run
+    * per query in run order; `results` is the scored min per query, -1
+    * when any of its runs failed (a failure must surface, not shrink
+    * the total as a bogus fast timing); `suspect`/`overRef` list the
+    * queries whose scored sample is still steal-suspect or still over
+    * its clean reference after the retime budget. */
+  final case class Sweep(samples: Seq[(String, Seq[Sample])],
+      results: Seq[(String, Double)], retimed: Seq[String],
+      suspect: Seq[String], overRef: Seq[String],
+      stealDelta: Option[Long], capacity: Double,
+      loadStart: Double, loadEnd: Double) {
+    /** Sweep-level verdict: any scored value still steal-suspect or
+      * over its reference. A clean sweep on a quiet box reads false. */
+    def contaminated: Boolean = suspect.nonEmpty || overRef.nonEmpty
+    /** Failures are excluded (visible as -1 per query). */
+    def total: Double = results.map(_._2).filter(_ >= 0).sum
+    def summary: SweepSummary =
+      SweepSummary(total, contaminated, stealDelta, suspect.size + overRef.size)
+  }
+
+  /** The timing policy of one sweep. `time` runs one query once
+    * (seconds, succeeded); `steal` reads the cumulative guest steal
+    * counter (-1 = unreadable); `quiet` waits (bounded) for steal to
+    * settle before a retime; `ref` holds the per-query clean
+    * references; `cpus` sizes the steal capacity.
+    *
+    * - Two interleaved passes, not back-to-back runs: the bench host
+    *   shows BURSTY hypervisor steal (multi-second whole-VM stalls invisible
+    *   to loadavg), and back-to-back samples of one query sit inside
+    *   the same burst (r8: llm_tfidf scored 10.48 s in both scored runs
+    *   vs 0.72 s quiet). A full pass between a query's two samples
+    *   means a burst must span the whole sweep to cover both. Min, not
+    *   mean: contention only ever ADDS time.
+    * - A third pass for queries whose best sample is under 0.3 s, where
+    *   small-sample jitter distorts per-shape ratios most (r10 advice
+    *   #5: agg_q1 0.196 s vs 0.120 s on identical code) — ~5 s more.
+    * - A retime pass: while a query's best sample is steal-suspect, OR
+    *   over its clean reference (steal-keyed retiming provably missed
+    *   real contamination, r12: scan_compact kept 1.62 s vs 0.82 s
+    *   quiet with zero recorded steal), OR — with steal unreadable —
+    *   its samples disagree by >1.5×, it is re-run after `quiet`: at
+    *   most 3 extra runs per query and 60 in the whole sweep. */
+  def sweep(queries: Seq[String], time: String => (Double, Boolean),
+      steal: () => Long, quiet: () => Unit, ref: Map[String, Double],
+      cpus: Int): Sweep = {
+    val loadStart = loadavg()
+    val stealStart = steal()
+    val wall0 = System.nanoTime()
+    val samples = scala.collection.mutable.LinkedHashMap(
+      queries.map(_ -> scala.collection.mutable.ArrayBuffer.empty[Sample]): _*)
+    def timeOne(name: String): Unit = {
+      val s0 = steal()
+      val (el, ok) = time(name)
+      val s1 = steal()
+      samples(name) += Sample(el, if (s0 < 0 || s1 < 0) -1L else s1 - s0, ok)
+    }
+    def oks(name: String): Seq[Sample] = samples(name).filter(_.ok).toSeq
+    def best(name: String): Option[Sample] = oks(name).minByOption(_.sec)
+    for (_ <- 1 to 2; name <- queries) timeOne(name)
+    for (name <- queries if best(name).exists(_.sec < 0.3)) timeOne(name)
+    def needsRetime(name: String): Boolean = best(name).exists { b =>
+      overRef(ref, name, b.sec) || {
+        if (b.steal >= 0) isSuspect(b, cpus)
+        else {
+          val ts = oks(name).map(_.sec)
+          ts.size >= 2 && ts.max > ts.min * 1.5
+        }
+      }
+    }
+    var budget = 60
+    val retimed = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (name <- queries) {
+      var extra = 0
+      while (needsRetime(name) && extra < 3 && budget > 0) {
+        if (extra == 0) retimed += name
+        quiet()
+        timeOne(name)
+        extra += 1; budget -= 1
+      }
+    }
+    val loadEnd = loadavg()
+    val stealEnd = steal()
+    // Whole-sweep capacity (jiffies): wall seconds between the steal
+    // endpoints × cpus × USER_HZ — the ref-mint steal gate's denominator.
+    val capacity = (System.nanoTime() - wall0) / 1e9 * cpus * 100
+    val results = samples.toSeq.map { case (name, ss) =>
+      name -> (if (ss.exists(!_.ok) || ss.isEmpty) -1.0 else ss.map(_.sec).min) }
+    Sweep(samples.toSeq.map { case (k, ss) => k -> ss.toSeq }, results,
+      retimed.toSeq,
+      samples.keys.filter(n => best(n).exists(isSuspect(_, cpus))).toSeq,
+      samples.keys.filter(n => best(n).exists(b => overRef(ref, n, b.sec))).toSeq,
+      if (stealStart < 0 || stealEnd < 0) None else Some(stealEnd - stealStart),
+      capacity, loadStart, loadEnd)
+  }
+
+  private def loadavg(): Double = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean.getSystemLoadAverage
+
+  /** Cumulative guest steal time (jiffies, /proc/stat col 8; USER_HZ =
+    * 100 on Linux). -1 = unreadable, emitted as null so it can't
+    * masquerade as "quiet". */
+  def stealJiffies(): Long = try {
+    scala.io.Source.fromFile("/proc/stat").getLines()
+      .find(_.startsWith("cpu ")).map(_.trim.split("\\s+"))
+      .filter(_.length > 8).map(_(8).toLong).getOrElse(-1L)
+  } catch { case _: Throwable => -1L }
+
+  /** Wait (at most 12 × 250 ms) for the steal rate to drop below ~20%
+    * of capacity before a retime — re-running INSIDE the same burst
+    * just burns the budget on another contaminated sample. */
+  def awaitQuiet(steal: () => Long, cpus: Int): Unit = {
+    var tries = 0
+    while (tries < 12) {
+      val s0 = steal()
+      Thread.sleep(250)
+      val d = if (s0 < 0) -1L else steal() - s0
+      if (d < 0 || d <= (0.20 * 0.25 * cpus * 100).toLong) return
+      tries += 1
+    }
+  }
+
+  def readText(path: String): Option[String] = try {
+    Some(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
+  } catch { case _: Throwable => None }
+
+  /** The whole-sweep second try (r14 verdict #1): a sustained steal
+    * burst contaminates the whole sweep, which the per-query retime
+    * budget cannot rescue, so a contaminated first sweep is re-run once
+    * (after `quiet`) over the same warm state; the caller promotes the
+    * cleaner attempt through [[chooseSweep]]. */
+  def retryOnce(run: => Sweep, quiet: () => Unit): Seq[Sweep] = {
+    val first = run
+    if (first.contaminated) { quiet(); Seq(first, run) } else Seq(first)
+  }
+
+  private def str(s: String): String = "\"" + s + "\""
+  private def jstr(o: Option[String]): String = o.map(str).getOrElse("null")
+  private def arr(xs: Seq[String]): String = xs.mkString("[", ",", "]")
+  private def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** A numeric provenance stamp (`_calib_s`, `_calib_mem_s`, `_cpus`)
+    * of the reference file; parseRef ignores these keys. */
+  def refStamp(txt: String, key: String): Option[Double] =
+    ("\"" + key + "\"\\s*:\\s*([0-9.]+)").r.findFirstMatchIn(txt)
+      .flatMap(_.group(1).toDoubleOption)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val nCpus = try { cpus.toInt } catch { case _: Throwable => 32 }
     val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // Warm up JIT/codegen/shuffle/parquet machinery once so the first
-    // timed query doesn't absorb ~5 s of one-time JVM costs. Warmup is
-    // best-effort: a failure here must never kill the timed run.
+    warmUp(spark, sfDir)
+
+    // Evidence files. The per-query clean reference arms the over-ref
+    // retime trigger and the mint ratchet; crossover.json (Spark vs
+    // DuckDB per shape, minted per round by CrossoverProbe +
+    // tools/crossover_duckdb.py) and scalesweep.json (the ×10
+    // full-inventory audit) ride the artifact — timing them inside the
+    // scored run would contaminate it.
+    val refTxt = readText(RefFile)
+    val crossoverTxt = readText(CrossoverFile)
+    val scalesweepTxt = readText(ScalesweepFile)
+    val refTimes = refTxt.map(parseRef).getOrElse(Map.empty[String, Double])
+    val calibRef = refTxt.flatMap(refStamp(_, "_calib_s"))
+    val calibMemRef = refTxt.flatMap(refStamp(_, "_calib_mem_s"))
+    val refCpus = refTxt.flatMap(refStamp(_, "_cpus"))
+
+    val queries = SparkEntry.queries.keys.toSeq
+    // Warm pass (untimed — also fills the Prepared cache); the plans
+    // stay pinned for the sweep's duration (see warmPin).
+    val pinned = warmPin(spark, sfDir, queries)
+    // Box-speed calibration, timed OUTSIDE the sweep windows.
+    val calib = try calibKernel() catch { case _: Throwable => -1.0 }
+    val calibMem = try calibMemKernel() catch { case _: Throwable => -1.0 }
+
+    // Both attempts ride the artifact ("sweep_attempts"). No JIT-settle
+    // wait before the first pass: the r20 A/B found C2 already quiet
+    // after warmPin.
+    val quiet = () => awaitQuiet(() => stealJiffies(), nCpus)
+    val attempts = retryOnce(sweep(queries, timeCount(spark, sfDir, _),
+      () => stealJiffies(), quiet, refTimes, nCpus), quiet)
+    val chosen = chooseSweep(attempts.head.summary, attempts.lift(1).map(_.summary))
+    val att = attempts(chosen - 1)
+
+    val splitJson = split(spark, sfDir, att.results.map(_._1))
+
+    val refCommit = refTxt.flatMap(stampFromJson)
+    val xCommit = crossoverTxt.flatMap(stampFromJson)
+    // Sanctioned ref-regression escape: force-minting is loud — the
+    // artifact itself says the ratchet was bypassed.
+    val refForce = Set("1", "true", "on").contains(
+      sys.env.getOrElse("SPARK_GRAFT_REF_FORCE", "").toLowerCase)
+    val head = Seq("metric" -> str("total"), "value" -> att.total.toString,
+      "unit" -> str("sec"),
+      "queries" -> obj(att.results.map { case (k, v) => k -> v.toString }))
+    val verdict = Seq("retimed" -> arr(att.retimed.map(str)),
+      "suspect" -> arr(att.suspect.map(str)),
+      "over_ref" -> arr(att.overRef.map(str)))
+    val ctx = Seq(
+      // All eight streaming entries reuse one durable checkpoint per
+      // (session, sf, query): their TIMED samples measure the
+      // AvailableNow RESTART path; the backlog is paid once, untimed.
+      "streaming_timed_mode" -> str("warm_checkpoint_restart"),
+      "batch_timed_mode" -> str("prepared_plan_reuse"),
+      "contaminated" -> att.contaminated.toString,
+      "ref_forced" -> refForce.toString,
+      "ref_queries" -> refTimes.size.toString,
+      "sweep_attempts" -> arr(attempts.map(a => obj(Seq(
+        "total" -> fmt3(a.total), "contaminated" -> a.contaminated.toString,
+        "steal_jiffies" -> a.stealDelta.map(_.toString).getOrElse("null"),
+        "suspect_n" -> a.suspect.size.toString,
+        "over_ref_n" -> a.overRef.size.toString)))),
+      "sweep_chosen" -> chosen.toString,
+      // Mint provenance: "stale" = src/main or build.sbt changed since
+      // the evidence was minted, i.e. it measured a different binary.
+      "ref_commit" -> jstr(refCommit), "ref_stale" -> mintStale(refCommit).toString,
+      "crossover_commit" -> jstr(xCommit), "crossover_stale" -> mintStale(xCommit).toString,
+      "scalesweep_stale" -> mintStale(scalesweepTxt.flatMap(stampFromJson)).toString,
+      // The scratch tier in use (the /dev/shm default can degrade).
+      "scratch_tier" -> str(if (spark.sparkContext.getConf.get("spark.local.dir", "")
+        .startsWith("/dev/shm")) "shm" else "disk"),
+      "calib_s" -> fmt3(calib),
+      "calib_ref" -> calibRef.map(fmt3).getOrElse("null"),
+      "calib_mem_s" -> fmt3(calibMem),
+      "calib_mem_ref" -> calibMemRef.map(fmt3).getOrElse("null"),
+      // The CPU config the reference was minted under: a cpus=4 run
+      // against a cpus=32 ref reads over_ref by design, and this field
+      // lets the reader tell that from a regression.
+      "ref_cpus" -> refCpus.map(_.toLong.toString).getOrElse("null"),
+      "prepared_pinned" -> pinned.size.toString,
+      "loadavg_start" -> att.loadStart.toString, "loadavg_end" -> att.loadEnd.toString,
+      "steal_jiffies" -> att.stealDelta.map(_.toString).getOrElse("null"),
+      "cpus" -> cpus)
+    val sf = Seq("sf" -> str(sfDir))
+    // Per-run times AND per-run steal deltas make the artifact
+    // self-diagnosing: a burst shows as one inflated sample with a
+    // matching steal spike. These and the embeds ride only the full
+    // line (and its file copy).
+    val fullLine = obj(head ++ Seq(
+      "runs" -> obj(att.samples.map { case (k, ss) => k -> arr(ss.map(_.sec.toString)) }),
+      "steals" -> obj(att.samples.map { case (k, ss) =>
+        k -> arr(ss.map(s => if (s.steal < 0) "null" else s.steal.toString)) })) ++
+      verdict ++ Seq("split" -> splitJson,
+        "crossover" -> crossoverTxt.map(crossoverBlock).getOrElse("null"),
+        "scalesweep" -> scalesweepTxt.map(scalesweepEmbed).getOrElse("null")) ++
+      ctx ++ sf)
+    println(fullLine)
+    // Also persist the full line as a FILE: stdout capture has
+    // truncated it before, and a file read can't be cut by a tail
+    // window. Best-effort: a write failure must never kill the run.
     try {
+      val out = java.nio.file.Paths.get("target", "bench_summary.json")
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.write(out,
+        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] summary file write failed (continuing): ${e.getMessage}")
+    }
+    // The CANONICAL line comes LAST and stays small (no runs/steals or
+    // embeds) so a tail window always holds it whole.
+    println(obj(head ++ Seq("n" -> att.results.size.toString,
+      "failed" -> att.results.count(_._2 < 0).toString) ++ verdict ++
+      Seq("slowest" -> obj(att.results.sortBy(-_._2).take(10)
+        .map { case (k, v) => k -> v.toString })) ++ ctx ++ sf))
+
+    // SPARK_GRAFT_REF_OUT=<path> mints this sweep's per-query mins as
+    // the next reference — only through the refMintRefusal gate.
+    sys.env.get("SPARK_GRAFT_REF_OUT").foreach { p =>
+      val candidate = att.results.filter(_._2 >= 0)
+      refMintRefusal(att.contaminated, att.stealDelta, att.capacity,
+          candidate.toMap, refTimes, force = refForce,
+          calibCandidate = calib, calibRef = calibRef,
+          calibMemCandidate = calibMem, calibMemRef = calibMemRef) match {
+        case Some(reason) =>
+          System.err.println(s"[bench] NOT writing ref: $reason")
+        case None =>
+          // Provenance stamps ride IN the file: parseRef drops
+          // "_"-prefixed keys, so none ever arms a trigger.
+          val prov = gitHead().map(h => "_mint_commit" -> str(h)).toSeq ++
+            Option.when(calib > 0)("_calib_s" -> fmt3(calib)) ++
+            Option.when(calibMem > 0)("_calib_mem_s" -> fmt3(calibMem)) ++
+            Option.when(cpus.forall(_.isDigit))("_cpus" -> cpus) ++
+            Option.when(refForce)("_ref_forced" -> "1")
+          java.nio.file.Files.write(java.nio.file.Paths.get(p),
+            (obj(prov ++ candidate.map { case (k, v) => k -> fmt3(v) }) + "\n")
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          System.err.println(
+            s"[bench] wrote ref to $p${if (refForce) " (FORCED past the ratchet)" else ""}")
+      }
+    }
+    spark.stop()
+  }
+
+  /** One-time JVM warm-up before any timed work, so the first timed
+    * query doesn't absorb ~5 s of JIT/codegen/shuffle/parquet set-up.
+    * Best-effort: a failure here must never kill the timed run. */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = try {
+    import org.apache.spark.sql.functions.{broadcast, col, collect_list, lit}
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/nation.parquet")
       .groupBy("n_regionkey").count().collect()
     // Warm the native cosine kernels on tiny synthetic vectors (40k
     // pair evaluations — enough for C2 to compile the inner loops).
     GraftSession(spark)
-    import org.apache.spark.sql.functions.{broadcast, collect_list, lit}
     val v = spark.range(200).selectExpr("id",
       "transform(sequence(0, 15), i -> cast((id * 31 + i) % 97 as float) / 97) as embedding")
     val packed = v
@@ -385,8 +673,7 @@ object Bench {
     // shared one-time costs, not query-specific work.
     val nat = spark.read.parquet(s"$sfDir/nation.parquet")
     nat.join(broadcast(spark.read.parquet(s"$sfDir/region.parquet")),
-      org.apache.spark.sql.functions.col("n_regionkey") ===
-        org.apache.spark.sql.functions.col("r_regionkey")).count()
+      col("n_regionkey") === col("r_regionkey")).count()
     spark.readStream.schema(nat.schema)
       .option("pathGlobFilter", "nation.parquet").parquet(sfDir)
       .groupBy("n_regionkey").count()
@@ -395,443 +682,32 @@ object Bench {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start().awaitTermination()
     spark.catalog.dropTempView("graft_warm_stream")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup failed (continuing): ${e.getMessage}")
-    }
-    // ---- Timing protocol (the lesson trail, one clause per round) ----
-    // Warm-then-timed (r2): one untimed run per query absorbs per-query
-    // first-call costs (janino compile of this query's codegen, JIT of
-    // its operators, shuffle/broadcast setup) so timed runs measure
-    // steady state — mirroring BASELINE.md's warm-repeat DuckDB
-    // protocol. Min-of-N (r5): contention only ever ADDS time, so min
-    // converges on the true cost. TWO FULL PASSES, not back-to-back
-    // runs (r8): this box shows BURSTY hypervisor steal — multi-second
-    // whole-VM stalls invisible to loadavg. Back-to-back samples of one
-    // query sit inside the same burst window (r8: llm_tfidf scored
-    // 10.48 s in BOTH driver runs vs 0.72 s on a quiet rerun — the
-    // >50%-disagreement third run never fired because both samples
-    // agreed, both contaminated). Interleaving pass A and pass B puts a
-    // full sweep (~tens of seconds) between a query's two samples; a
-    // burst would have to span the entire sweep to cover both.
-    // Per-sample steal windows (r8→r9): /proc/stat col 8 is sampled
-    // around EVERY timed run, so each sample carries its own
-    // contamination evidence. A sample whose window lost >25% of its
-    // CPU capacity to steal is suspect; if a query's BEST sample is
-    // suspect, the end-of-sweep re-time pass re-runs it (after waiting
-    // for steal to go quiet, bounded global budget). Queries whose
-    // scored value still comes from a suspect window are listed in
-    // "suspect" — an honest artifact over a silently-inflated one.
-    def loadavg: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    // Cumulative guest steal time (jiffies, /proc/stat col 8; USER_HZ
-    // = 100 on this kernel). -1 = unreadable (diagnostic unavailable,
-    // emitted as null per-field so it can't masquerade as "quiet").
-    def stealJiffies: Long = try {
-      scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).map(_.trim.split("\\s+"))
-        .filter(_.length > 8).map(_(8).toLong).getOrElse(-1L)
-    } catch { case _: Throwable => -1L }
-    val nCpus = try { cpus.toInt } catch { case _: Throwable => 32 }
-
-    final case class Sample(sec: Double, steal: Long, ok: Boolean)
-    // A sample is steal-suspect when its window lost more than 25% of
-    // its whole-VM CPU capacity (elapsed × cpus × USER_HZ jiffies) to
-    // the hypervisor — far above the ~4% background this box shows
-    // when "quiet", far below the ~100% of a stall burst. The 50-jiffy
-    // floor keeps sub-0.1 s queries from flagging on background noise.
-    def isSuspect(s: Sample): Boolean =
-      s.steal >= 0 && s.steal > math.max(50L, (0.25 * s.sec * nCpus * 100).toLong)
-    // Timed runs go through the PREPARED path (api/Prepared): the
-    // DataFrame is built once per query (the warm pass pays it) and
-    // each timed `.count()` constructs a fresh QueryExecution over the
-    // already-analyzed plan — full job re-runs every time (fresh
-    // shuffle ids; the r13 A/B measured equal task counts), only the
-    // builder + per-Dataset analysis cost is skipped. This is the
-    // prepared-statement protocol a serving engine uses, and the
-    // protocol DuckDB's ~1 ms planner makes BASELINE.md's warm repeats
-    // equivalent to. Side-effecting builders (streaming restarts,
-    // write-path scans) are never memoized — for them this is exactly
-    // the old fresh-build path.
-    def timeOne(name: String): Sample = {
-      val s0 = stealJiffies
-      val (el, ok) = timeCount(spark, sfDir, name)
-      val s1 = stealJiffies
-      Sample(el, if (s0 < 0 || s1 < 0) -1L else s1 - s0, ok)
-    }
-    // Wait (bounded) for the steal rate to drop below ~20% of capacity
-    // before a re-time attempt — re-running INSIDE the same burst just
-    // burns the budget on another contaminated sample.
-    def awaitQuiet(): Unit = {
-      var tries = 0
-      while (tries < 12) {
-        val s0 = stealJiffies
-        Thread.sleep(250)
-        val d = if (s0 < 0) -1L else stealJiffies - s0
-        if (d < 0 || d <= (0.20 * 0.25 * nCpus * 100).toLong) return
-        tries += 1
-      }
-    }
-
-    // Per-query CLEAN reference (r12 verdict #1): steal-keyed retiming
-    // provably missed real contamination — scan_compact kept a 1.62 s
-    // min (quiet: 0.82 s) and llm_ann_pq read 1.20 s on BOTH passes
-    // with ZERO recorded steal. A committed bench_ref.json (per-query
-    // mins from a verified-quiet sweep on this round's binary,
-    // regenerated each round via SPARK_GRAFT_REF_OUT) gives retiming a
-    // second trigger that sees what the steal counter can't: any
-    // scored min >1.5× its clean reference (and >80 ms absolute, so
-    // sub-0.1 s jitter can't flag) is re-timed, and if it STAYS over
-    // after the budget it is listed in "over_ref" and the sweep-level
-    // "contaminated" verdict trips.
-    val refPath = sys.env.getOrElse("SPARK_GRAFT_REF", "bench_ref.json")
-    val refTxt: Option[String] = try {
-      Some(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(refPath)), java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => None }
-    val refTimes: Map[String, Double] =
-      refTxt.map(parseRef).getOrElse(Map.empty)
-    def overRef(name: String, sec: Double): Boolean =
-      Bench.overRef(refTimes, name, sec)
-
-    val queries = SparkEntry.queries.keys.toSeq
-    // Warm pass (untimed — also fills the Prepared cache); the plans
-    // stay pinned for the sweep's duration (see warmPin).
-    val pinned = warmPin(spark, sfDir, queries)
-    // Box-speed calibration (advisory): timed OUTSIDE the sweep
-    // windows, compared against the reference's `_calib_s` stamp.
-    val calib = try calibKernel() catch { case _: Throwable => -1.0 }
-    val calibRef: Option[Double] =
-      refTxt.flatMap("\"_calib_s\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(_))
-        .map(_.group(1).toDouble)
-    // The bandwidth twin (r19 verdict #2) — see calibMemKernel.
-    val calibMem = try calibMemKernel() catch { case _: Throwable => -1.0 }
-    val calibMemRef: Option[Double] =
-      refTxt.flatMap("\"_calib_mem_s\"\\s*:\\s*([0-9.]+)".r.findFirstMatchIn(_))
-        .map(_.group(1).toDouble)
-    // The CPU config the reference was minted under (parseRef-inert
-    // stamp, like _calib_s). Motivation: a cpus=4 run against a
-    // cpus=32-minted ref reads over_ref→contaminated by DESIGN (the
-    // two configs differ ~15% on this box), but without the stamp the
-    // artifact reader cannot tell those flags from a real regression —
-    // exactly what happened in the r15 degraded-window sweep
-    // (cpus:4, over_ref 2, steal only 701).
-    val refCpus: Option[String] =
-      refTxt.flatMap("\"_cpus\"\\s*:\\s*([0-9]+)".r.findFirstMatchIn(_))
-        .map(_.group(1))
-
-    /** One full timed sweep: two interleaved passes, a third for
-      * sub-0.3 s entries, the end-of-sweep retime pass, and the
-      * per-sweep verdict surface. Self-contained so a contaminated
-      * verdict can trigger ONE bounded whole-sweep retry (r14 verdict
-      * #1) over the same warm state. */
-    final case class Attempt(
-      results: scala.collection.mutable.LinkedHashMap[String, Double],
-      runsJson: String, stealsJson: String,
-      retimed: Seq[String], suspect: Seq[String], overRefQs: Seq[String],
-      contaminated: Boolean, stealDelta: Option[Long], capacity: Double,
-      loadStart: Double, loadEnd: Double)
-
-    def timedSweep(): Attempt = {
-    val loadStart = loadavg
-    val stealStart = stealJiffies
-    val sweepWall0 = System.nanoTime()
-    val samples = scala.collection.mutable.LinkedHashMap(
-      queries.map { n =>
-        n -> scala.collection.mutable.ArrayBuffer.empty[Sample] }: _*)
-    for (_ <- 1 to 2; name <- queries) samples(name) += timeOne(name)
-    // Third interleaved pass for SUB-0.3 s entries (r10 advice #5):
-    // two-pass-min fixed burst contamination, but small-sample jitter
-    // still distorts per-shape ratios at the sub-second grain (judge
-    // r10: agg_q1 0.196 s vs r8-min 0.120 s on identical code). The
-    // <0.3 s entries sum to ~15 s of sweep, so one more pass is a
-    // bounded ~5 s for a third sample exactly where variance matters
-    // most relative to the measured value.
-    for (name <- queries) {
-      val oks = samples(name).filter(_.ok)
-      if (oks.nonEmpty && oks.map(_.sec).min < 0.3)
-        samples(name) += timeOne(name)
-    }
-    // End-of-sweep outlier pass: re-time while the best ok sample is
-    // steal-suspect, OR exceeds its clean reference >1.5× (the r12
-    // gap: agreement-under-load with zero recorded steal), OR steal is
-    // unreadable AND the passes disagree >1.5× (r8 fallback rule).
-    // ≤3 extra runs per query, ≤60 globally (ref-triggered retimes
-    // need headroom the steal-only budget didn't).
-    var extraBudget = 60
-    val retimed = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (name <- queries) {
-      var extra = 0
-      def best: Option[Sample] = {
-        val oks = samples(name).filter(_.ok)
-        if (oks.isEmpty) None else Some(oks.minBy(_.sec))
-      }
-      def needsRetime: Boolean = best.exists { b =>
-        overRef(name, b.sec) || {
-          if (b.steal >= 0) isSuspect(b)
-          else {
-            val ts = samples(name).filter(_.ok).map(_.sec)
-            ts.size >= 2 && ts.max > ts.min * 1.5
-          }
-        }
-      }
-      while (needsRetime && extra < 3 && extraBudget > 0) {
-        if (extra == 0) retimed += name
-        awaitQuiet()
-        samples(name) += timeOne(name)
-        extra += 1; extraBudget -= 1
-      }
-    }
-    val loadEnd = loadavg
-    val stealEnd = stealJiffies
-    // Whole-sweep steal capacity window (jiffies): wall seconds between
-    // the steal endpoints × cpus × USER_HZ — the denominator for the
-    // ref-mint steal-fraction gate.
-    val sweepCapacity = (System.nanoTime() - sweepWall0) / 1e9 * nCpus * 100
-    // A failed query must surface as -1, not as a bogus near-zero
-    // "fast" timing that silently shrinks the scored total.
-    val results = samples.map { case (name, ss) =>
-      val oks = ss.filter(_.ok)
-      name -> (if (oks.size < ss.size || oks.isEmpty) -1.0 else oks.map(_.sec).min)
-    }
-    // Queries whose SCORED sample still sits in a steal-suspect window
-    // after the re-time budget: the number is an upper bound, not a
-    // clean measurement — flagged so the artifact reader knows.
-    val suspect = samples.collect { case (name, ss)
-      if ss.exists(_.ok) && isSuspect(ss.filter(_.ok).minBy(_.sec)) => name }.toSeq
-    // Queries whose scored min STILL exceeds the clean reference >1.5×
-    // after retiming — contamination the steal counter didn't see, or
-    // a genuine regression vs the committed reference; either way the
-    // artifact reader must not take the number at face value.
-    val overRefQs = samples.collect { case (name, ss)
-      if ss.exists(_.ok) && overRef(name, ss.filter(_.ok).map(_.sec).min)
-      => name }.toSeq
-    // Per-run times AND per-run steal-window deltas: a clean sweep
-    // shows pass A ≈ pass B and near-zero steals; a burst shows up as
-    // one inflated sample with a matching steal spike — the artifact
-    // is self-diagnosing without a judge rerun.
-    val runsJson = samples.map { case (k, ss) =>
-      s"\"" + k + "\":[" + ss.map(_.sec).mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    val stealsJson = samples.map { case (k, ss) =>
-      s"\"" + k + "\":[" + ss.map(s => if (s.steal < 0) "null" else s.steal.toString)
-        .mkString(",") + "]" }.mkString("{", ",", "}")
-    // Sweep-level contamination verdict (r12 verdict #1): trip when any
-    // scored value is still steal-suspect or still over its clean
-    // reference after the retime budget. A clean sweep on a quiet box
-    // reads false; the driver (and judge) can reject a true at a
-    // glance instead of reverse-engineering per-query steal maps.
-    Attempt(results, runsJson, stealsJson, retimed.toSeq, suspect,
-      overRefQs, suspect.nonEmpty || overRefQs.nonEmpty,
-      if (stealStart < 0 || stealEnd < 0) None else Some(stealEnd - stealStart),
-      sweepCapacity, loadStart, loadEnd)
-    } // timedSweep
-
-    // The whole-sweep second try (r14 verdict #1): when the FIRST
-    // sweep's verdict comes back contaminated, re-run the full timed
-    // sweep once over the same warm state (~the timed total, no warm
-    // cost) and promote the cleaner attempt — the per-query retime
-    // budget can rescue individual queries, but a sustained steal
-    // burst contaminates the whole sweep and the artifact used to
-    // carry the burst number with no recourse. Both attempts ride the
-    // artifact ("sweep_attempts").
-    // No JIT-settle wait before the first timed pass: the r20 A/B
-    // (adjacent scored-style sweeps at sf0.1) found HotSpot's C2 queue
-    // already quiet one 1 s poll after warmPin — the in-sweep recompile
-    // draws are lazy tier-up during the sweep, which a pre-sweep wait
-    // cannot touch (settle-on 27.98 s/12 retimes vs off 26.01 s/3,
-    // box drift, not the wait).
-    val attempt1 = timedSweep()
-    val attempt2 =
-      if (attempt1.contaminated) { awaitQuiet(); Some(timedSweep()) }
-      else None
-    def summ(a: Attempt) = SweepSummary(
-      a.results.values.filter(_ >= 0).sum, a.contaminated, a.stealDelta,
-      a.suspect.size + a.overRefQs.size)
-    val sweepChosen = chooseSweep(summ(attempt1), attempt2.map(summ))
-    val att = if (sweepChosen == 2) attempt2.get else attempt1
-    val attemptsJson = (Seq(attempt1) ++ attempt2).map { a =>
-      val s = summ(a)
-      s"""{"total":${fmt3(s.total)},"contaminated":${a.contaminated},""" +
-        s""""steal_jiffies":${a.stealDelta.map(_.toString).getOrElse("null")},""" +
-        s""""suspect_n":${a.suspect.size},"over_ref_n":${a.overRefQs.size}}"""
-    }.mkString("[", ",", "]")
-
-    val results = att.results
-    val suspect = att.suspect
-    val overRefQs = att.overRefQs
-    val runsJson = att.runsJson
-    val stealsJson = att.stealsJson
-    val sweepCapacity = att.capacity
-    val loadStart = att.loadStart
-    val loadEnd = att.loadEnd
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val retimedJson = att.retimed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val suspectJson = suspect.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val overRefJson = overRefQs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Failures are excluded from the total (visible as -1 per-query).
-    val total = results.values.filter(_ >= 0).sum
-    // Whole-sweep steal delta is null (not 0) when either read failed:
-    // a 0 must always mean "measured quiet", never "couldn't measure".
-    val stealDelta = att.stealDelta.map(_.toString).getOrElse("null")
-    val contaminated = att.contaminated
-    // PLAN/EXEC split for the BASELINE.md comparison shapes (r12
-    // verdict #5): plan_s = fresh builder + analysis + optimization +
-    // physical planning (forcing executedPlan on a FRESH build — the
-    // cost the prepared path amortizes); exec_s = a prepared-path
-    // `.count()` — the SAME protocol as the timed samples (r13 verdict
-    // #3: the old exec_s materialized toRdd on a fresh build, a
-    // different projection AND a different plan-reuse regime, and the
-    // resulting 7× internal discrepancy vs the timed values was
-    // unexplained inside the artifact). With one protocol, exec_s ≈
-    // the query's scored value and plan_s is exactly what prepared
-    // reuse amortizes. The inline "protocol" field says so.
-    // min-of-2; runs after the timed sweep so it can't pollute the
-    // samples.
-    val splitJson = try {
-      val shapes = graft.tools.CrossoverProbe.Shapes.filter(results.contains).map { name =>
-        val fn = SparkEntry.queries(name)
-        val (ps, es) = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          df.queryExecution.executedPlan
-          val p = (System.nanoTime() - t0) / 1e9
-          val (e, ok) = timeCount(spark, sfDir, name)
-          require(ok, s"split exec of $name failed")
-          (p, e)
-        }.unzip
-        s""""$name":{"plan_s":${fmt3(ps.min)},"exec_s":${fmt3(es.min)}}"""
-      }
-      (shapes :+ (""""protocol":"plan_s=fresh build+physical planning """ +
-        """(the cost prepared reuse amortizes); exec_s=prepared count(), """ +
-        """same protocol as the timed samples"""")).mkString("{", ",", "}")
-    } catch { case _: Throwable => "{}" }
-    // Honesty disclosure (r12, advice): ALL EIGHT streaming entries
-    // reuse one durable checkpoint per (session, sf, query), so their
-    // TIMED samples measure the production AvailableNow RESTART path
-    // (source listing + state-store open over committed offsets, zero
-    // new data) — the full backlog is paid once in the untimed warm
-    // pass. Cold-checkpoint full-backlog times live in NOTES (r12)
-    // and in perfbench.Main's `cold` executions. (r13:
-    // ev_tumbling_stream moved off the non-durable memory sink onto a
-    // foreachBatch parquet overwrite, closing the last
-    // re-streams-every-pass exception.)
-    // Crossover evidence (r13 verdict #1), embedded verbatim from the
-    // committed crossover.json: per-shape Spark-vs-DuckDB ratios at
-    // ×1/×10/×100 corpora both engines read, minted by
-    // tools/CrossoverProbe + tools/crossover_duckdb.py (provenance and
-    // protocol are fields INSIDE the block). Measured per round on the
-    // round's binary, not per sweep — synthesizing the corpora and
-    // timing DuckDB inside the driver's timed run would contaminate it.
-    def readText(path: String): Option[String] = try {
-      Some(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => None }
-    val crossoverTxt = readText(
-      sys.env.getOrElse("SPARK_GRAFT_CROSSOVER", "crossover.json"))
-    val crossover = crossoverTxt.map(crossoverBlock).getOrElse("null")
-    // ScaleSweep evidence (r14 verdict #3): the committed per-round
-    // ×10 full-inventory audit, embedded compactly (stamp + FLAGGED +
-    // worst-10 ratios); the full 167-row table lives in the file.
-    val scalesweepTxt = readText(
-      sys.env.getOrElse("SPARK_GRAFT_SCALESWEEP", "scalesweep.json"))
-    val scalesweep = scalesweepTxt.map(scalesweepEmbed).getOrElse("null")
-    // Mint provenance (r14 verdict #2): every evidence file riding the
-    // artifact carries the commit it was minted at; "stale" = src/main
-    // or build.sbt changed since that commit (committing the minted
-    // file itself never flags). A stale:true tells the reader the
-    // evidence was measured on a DIFFERENT binary than this sweep's.
-    def jstr(o: Option[String]): String =
-      o.map("\"" + _ + "\"").getOrElse("null")
-    val refStamp = refTxt.flatMap(stampFromJson)
-    val xStamp = crossoverTxt.flatMap(stampFromJson)
-    val ssStamp = scalesweepTxt.flatMap(stampFromJson)
-    // Scratch tier actually in use (r14 advice: the /dev/shm default
-    // can silently degrade; the artifact records which tier ran).
-    val scratchTier =
-      if (spark.sparkContext.getConf.get("spark.local.dir", "")
-        .startsWith("/dev/shm")) "shm" else "disk"
-    // Sanctioned ref-regression escape (r13 verdict #4): force-minting
-    // is loud — the artifact itself says the ratchet was bypassed.
-    val refForce = Set("1", "true", "on").contains(
-      sys.env.getOrElse("SPARK_GRAFT_REF_FORCE", "").toLowerCase)
-    val ctx = s""""streaming_timed_mode":"warm_checkpoint_restart",""" +
-      s""""batch_timed_mode":"prepared_plan_reuse",""" +
-      s""""contaminated":$contaminated,"ref_forced":$refForce,""" +
-      s""""ref_queries":${refTimes.size},""" +
-      s""""sweep_attempts":$attemptsJson,"sweep_chosen":$sweepChosen,""" +
-      s""""ref_commit":${jstr(refStamp)},"ref_stale":${mintStale(refStamp)},""" +
-      s""""crossover_commit":${jstr(xStamp)},"crossover_stale":${mintStale(xStamp)},""" +
-      s""""scalesweep_stale":${mintStale(ssStamp)},""" +
-      s""""scratch_tier":"$scratchTier",""" +
-      s""""calib_s":${fmt3(calib)},""" +
-      s""""calib_ref":${calibRef.map(fmt3).getOrElse("null")},""" +
-      s""""calib_mem_s":${fmt3(calibMem)},""" +
-      s""""calib_mem_ref":${calibMemRef.map(fmt3).getOrElse("null")},""" +
-      s""""ref_cpus":${refCpus.getOrElse("null")},""" +
-      s""""prepared_pinned":${pinned.size},""" +
-      s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +
-      s""""steal_jiffies":$stealDelta,"cpus":$cpus"""
-    // crossover rides only the FULL line + file — the short trailing
-    // summary must stay small enough to survive any tail window.
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runsJson,"steals":$stealsJson,"retimed":$retimedJson,"suspect":$suspectJson,"over_ref":$overRefJson,"split":$splitJson,"crossover":$crossover,"scalesweep":$scalesweep,$ctx,"sf":"$sfDir"}"""
-    println(fullLine)
-    // Also persist the summary as a FILE: the driver's stdout capture
-    // has truncated this line twice (r2/r3) and r11 arrived with
-    // "parsed": null — a file read can't be cut by a tail window.
-    // Best-effort: a write failure must never kill the timed run.
-    try {
-      val out = java.nio.file.Paths.get("target", "bench_summary.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out,
-        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] summary file write failed (continuing): ${e.getMessage}")
-    }
-    // Truncation-proof summary LAST: the full line above is one giant
-    // JSON object and both r2/r3 driver artifacts arrived with its head
-    // (the total) cut off by tail capture. The final line is the
-    // CANONICAL one (r21 verdict #7): it carries the full per-query
-    // map — without the giant runs/steals/crossover/scalesweep embeds —
-    // so a truncated or unparsable full line can never blind the
-    // driver's round-over-round comparison again (BENCH_r20 arrived
-    // parsed:null and PERF_r21 lost every prev column).
-    val slowest = results.toSeq.sortBy(-_._2).take(10)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n":${results.size},"failed":${results.values.count(_ < 0)},"retimed":$retimedJson,"suspect":$suspectJson,"over_ref":$overRefJson,"slowest":$slowest,$ctx,"sf":"$sfDir"}""")
-    // Reference-regeneration mode: SPARK_GRAFT_REF_OUT=<path> writes
-    // this sweep's per-query mins as the next committed bench_ref.json
-    // — ONLY when the sweep itself verified clean (refusing to mint a
-    // reference from a contaminated sweep is the whole point).
-    sys.env.get("SPARK_GRAFT_REF_OUT").foreach { p =>
-      val candidate = results.collect {
-        case (k, v) if v >= 0 => k -> v }.toMap
-      refMintRefusal(contaminated,
-          if (stealDelta == "null") None else Some(stealDelta.toLong),
-          sweepCapacity, candidate, refTimes, force = refForce,
-          calibCandidate = calib, calibRef = calibRef,
-          calibMemCandidate = calibMem, calibMemRef = calibMemRef) match {
-        case Some(reason) =>
-          System.err.println(s"[bench] NOT writing ref: $reason")
-        case None =>
-          // Provenance stamps ride IN the file: parseRef drops
-          // "_"-prefixed keys, so neither the forced flag nor the mint
-          // commit ever arms a trigger or joins ratchet totals.
-          val prov = gitHead().map(h => s""""_mint_commit":"$h"""").toSeq ++
-            (if (calib > 0) Seq(s""""_calib_s":${fmt3(calib)}""") else Seq.empty) ++
-            (if (calibMem > 0) Seq(s""""_calib_mem_s":${fmt3(calibMem)}""") else Seq.empty) ++
-            (if (cpus.forall(_.isDigit)) Seq(s""""_cpus":$cpus""") else Seq.empty) ++
-            (if (refForce) Seq(""""_ref_forced":1""") else Seq.empty)
-          val body = (prov ++ results.collect { case (k, v) if v >= 0 =>
-            s""""$k":${fmt3(v)}""" }).mkString("{", ",", "}\n")
-          java.nio.file.Files.write(java.nio.file.Paths.get(p),
-            body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          System.err.println(
-            s"[bench] wrote ref to $p${if (refForce) " (FORCED past the ratchet)" else ""}")
-      }
-    }
-    spark.stop()
+  } catch { case e: Throwable =>
+    System.err.println(s"[bench] warmup failed (continuing): ${e.getMessage}")
   }
+
+  /** PLAN/EXEC split for the BASELINE.md comparison shapes, min of 2,
+    * run after the timed sweep so it can't pollute the samples: plan_s
+    * = fresh builder + analysis + optimization + physical planning (the
+    * cost prepared reuse amortizes); exec_s = a prepared `.count()`,
+    * the same protocol as the timed samples, so exec_s ≈ the query's
+    * scored value. "{}" when any shape fails. */
+  private def split(spark: SparkSession, sfDir: String, scored: Seq[String]): String = try {
+    val shapes = graft.tools.CrossoverProbe.Shapes.filter(scored.contains).map { name =>
+      val (ps, es) = (1 to 2).map { _ =>
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+        val p = (System.nanoTime() - t0) / 1e9
+        val (e, ok) = timeCount(spark, sfDir, name)
+        require(ok, s"split exec of $name failed")
+        (p, e)
+      }.unzip
+      s""""$name":{"plan_s":${fmt3(ps.min)},"exec_s":${fmt3(es.min)}}"""
+    }
+    (shapes :+ (""""protocol":"plan_s=fresh build+physical planning """ +
+      """(the cost prepared reuse amortizes); exec_s=prepared count(), """ +
+      """same protocol as the timed samples"""")).mkString("{", ",", "}")
+  } catch { case _: Throwable => "{}" }
 
   /** The bench session, shared by every harness main that times
     * queries or synthesizes corpora (CrossoverProbe, ScaleSweep,
@@ -906,7 +782,15 @@ object Bench {
         System.err.println(s"[bench] warm $n @$sf failed: ${e.getMessage}"); None }
     }
 
-  /** One timed prepared `.count()` of `name`: (seconds, succeeded). */
+  /** One timed prepared `.count()` of `name`: (seconds, succeeded).
+    * The DataFrame is built once per query (the warm pass pays it) and
+    * each timed `.count()` constructs a fresh QueryExecution over the
+    * already-analyzed plan — a full job re-run (fresh shuffle ids, equal
+    * task counts), skipping only the builder and per-Dataset analysis:
+    * the prepared-statement protocol of a serving engine, which DuckDB's
+    * ~1 ms planner makes BASELINE.md's warm repeats equivalent to.
+    * Side-effecting builders (streaming restarts, write-path scans) are
+    * never memoized, so for them this is a fresh build. */
   def timeCount(spark: SparkSession, sf: String, name: String): (Double, Boolean) = {
     val t0 = System.nanoTime()
     val ok = try { graft.api.Prepared.df(spark, sf, name).count(); true }

@@ -31,6 +31,8 @@ object Verify {
     // local iteration aid; the driver always passes exactly two args.
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Its own builder, not Bench.session: this is the oracle-gated
+    // correctness run, and its starved spills must not land on tmpfs.
     val b0 = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -38,12 +37,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     val written = new LinkedBlockingQueue[QueryExecution]()
     spark.listenerManager.register(new QueryExecutionListener {

@@ -71,6 +71,50 @@ object StreamDemo {
   private val NoFlushConfs =
     StateConfs :+ ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
+  /** Run `stream` to completion (Trigger.AvailableNow) into the
+    * append-mode parquet FILE sink under `root` (`out/`, checkpoint in
+    * `ckpt/`) with `confs` set, and read the sink's committed output
+    * back as a plain parquet scan — nothing is ever resident on the
+    * driver, the production shape for unbounded streams. The file
+    * sink's `_spark_metadata` log makes the read-back exactly the
+    * committed rows, also across restarts from the same checkpoint. */
+  private[graft] def appendToParquet(spark: SparkSession,
+      root: java.nio.file.Path, confs: Seq[(String, String)])(
+      stream: => DataFrame): DataFrame = {
+    val out = root.resolve("out").toString
+    val schema = withConfs(spark, confs) {
+      val df = stream
+      df.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+      df.schema
+    }
+    readBack(spark, out, schema)
+  }
+
+  /** The parquet output under `out`, or the empty relation of `schema`
+    * when nothing was ever written there: an EMPTY source runs zero
+    * microbatches (and so does every restart after one, but then the
+    * first run's output exists), which must surface as zero rows, not
+    * a path error. Output is detected on CONTENT (non-empty part
+    * files), not the _SUCCESS marker — clusters commonly set
+    * mapreduce.fileoutputcommitter.marksuccessfuljobs=false, under
+    * which a marker check would serve the empty fallback forever. The
+    * fallback takes parquet read-back nullability (every column
+    * nullable), so both branches return the identical StructType. */
+  private def readBack(spark: SparkSession, out: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val parts = new java.io.File(out).listFiles()
+    val hasOutput = parts != null && parts.exists(f =>
+      f.getName.startsWith("part-") && f.length > 0)
+    if (hasOutput) spark.read.parquet(out)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(
+        schema.fields.map(_.copy(nullable = true))))
+  }
+
   /** Streaming source over the corpus events table, resolving BOTH
     * physical layouts: the driver corpus ships events as a single
     * FILE `<sf>/events.parquet` (FileStreamSource wants a directory,
@@ -130,27 +174,7 @@ object StreamDemo {
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    // An EMPTY source yields zero microbatches and nothing written (and
-    // so does every restart after one — but then the output exists from
-    // the first run): surface the empty relation, not a path error.
-    // Detect on actual CONTENT (non-empty part files), not the _SUCCESS
-    // marker — clusters commonly set
-    // mapreduce.fileoutputcommitter.marksuccessfuljobs=false, under
-    // which a marker check would return the empty fallback forever
-    // despite valid output (r13 advice). The fallback schema is DERIVED
-    // from the streaming aggregation itself with parquet read-back
-    // nullability (every column nullable), so both branches of this
-    // function return the identical StructType (r13 verdict #5).
-    val parts = new java.io.File(out).listFiles()
-    val hasOutput = parts != null && parts.exists(f =>
-      f.getName.startsWith("part-") && f.length > 0)
-    if (!hasOutput)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          agg.schema.fields.map(_.copy(nullable = true))))
-    else
-      spark.read.parquet(out).orderBy("hour_start", "event_type")
+    readBack(spark, out, agg.schema).orderBy("hour_start", "event_type")
   }
 
   /** Watermark-driven APPEND-mode streaming aggregation: hourly counts
@@ -179,22 +203,9 @@ object StreamDemo {
   }
 
   def appendStream(spark: SparkSession, sf: String): DataFrame = {
-    // Parquet FILE sink, not a memory sink: finalized windows stream
-    // straight to files and the result is read back as a plain parquet
-    // scan — nothing is ever resident on the driver, which is the
-    // production shape for unbounded streams (the memory sink was the
-    // one driver-resident surface left in round 2).
-    val dir = streamRoot(spark, sf, "ev_append")
-    val out = dir.resolve("out").toString
-    val ckpt = dir.resolve("ckpt").toString
-    withConfs(spark, StateConfs) {
-      val q = appendAgg(spark, sf)
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out).orderBy("hour_start", "event_type")
+    appendToParquet(spark, streamRoot(spark, sf, "ev_append"), StateConfs) {
+      appendAgg(spark, sf)
+    }.orderBy("hour_start", "event_type")
   }
 
   /** Stateful streaming SESSIONIZATION in append mode — the hardest
@@ -207,11 +218,8 @@ object StreamDemo {
     * watermark (max event time floored to ms − 10 min). */
   def sessionStream(spark: SparkSession, sf: String): DataFrame = {
     val schema = graft.Tables.eventsRaw(spark, sf).schema
-    val dir = streamRoot(spark, sf, "ev_sess")
-    val out = dir.resolve("out").toString
-    val ckpt = dir.resolve("ckpt").toString
-    withConfs(spark, StateConfs) {
-      val q = eventsStream(spark, sf, schema)
+    appendToParquet(spark, streamRoot(spark, sf, "ev_sess"), StateConfs) {
+      eventsStream(spark, sf, schema)
         .withColumn("ts2", timestamp_micros(graft.Tables.tsUsExpr(schema)))
         .withWatermark("ts2", "10 minutes")
         .groupBy(session_window(col("ts2"), "30 minutes"), col("user_id"))
@@ -219,12 +227,7 @@ object StreamDemo {
         .select(col("user_id"),
           ntz(col("session_window.start")).as("s_start"),
           ntz(col("session_window.end")).as("s_end"), col("cnt"))
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out).orderBy("user_id", "s_start")
+    }.orderBy("user_id", "s_start")
   }
 
   /** One session in flight: [firstUs, lastUs] event-time span and its
@@ -272,9 +275,6 @@ object StreamDemo {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val schema = graft.Tables.eventsRaw(spark, sf).schema
-    val dir = streamRoot(spark, sf, "ev_csess")
-    val out = dir.resolve("out").toString
-    val ckpt = dir.resolve("ckpt").toString
     val func = (key: Long, it: Iterator[(Long, Long, java.sql.Timestamp)],
         state: GroupState[SessState]) => {
       val prev = if (state.exists) state.get.sessions else Nil
@@ -299,8 +299,8 @@ object StreamDemo {
       closed.sortBy(_.firstUs).iterator.map(s =>
         SessRow(key, tsFromUs(s.firstUs), tsFromUs(s.lastUs + GapUs), s.cnt))
     }
-    withConfs(spark, StateConfs) {
-      val src = eventsStream(spark, sf, schema)
+    appendToParquet(spark, streamRoot(spark, sf, "ev_csess"), StateConfs) {
+      eventsStream(spark, sf, schema)
         .withColumn("ts2", timestamp_micros(graft.Tables.tsUsExpr(schema)))
         .withWatermark("ts2", "10 minutes")
         // The watermark-attached column must survive into the stateful
@@ -308,17 +308,11 @@ object StreamDemo {
         .select(col("user_id").cast("long"),
           graft.Tables.tsUsExpr(schema).as("us"), col("ts2"))
         .as[(Long, Long, java.sql.Timestamp)]
-      val q = src.groupByKey(_._1)
+        .groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append(),
           GroupStateTimeout.EventTimeTimeout())(func)
         .toDF()
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out)
-      .select(col("user_id"), ntz(col("s_start")).as("s_start"),
+    }.select(col("user_id"), ntz(col("s_start")).as("s_start"),
         ntz(col("s_end")).as("s_end"), col("cnt"))
       .orderBy("user_id", "s_start")
   }
@@ -357,17 +351,9 @@ object StreamDemo {
   }
 
   def joinStream(spark: SparkSession, sf: String): DataFrame = {
-    val dir = streamRoot(spark, sf, "ev_join")
-    val out = dir.resolve("out").toString
-    val ckpt = dir.resolve("ckpt").toString
-    withConfs(spark, NoFlushConfs) {
-      val q = joinedStreams(spark, sf)
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out).orderBy("user_id", "v_id", "p_id")
+    appendToParquet(spark, streamRoot(spark, sf, "ev_join"), NoFlushConfs) {
+      joinedStreams(spark, sf)
+    }.orderBy("user_id", "v_id", "p_id")
   }
 
   /** Streaming EXACT DEDUP of an at-least-once ingest: the events
@@ -385,26 +371,18 @@ object StreamDemo {
     * — deterministic, and the oracle is simply the original table. */
   def dedupStream(spark: SparkSession, sf: String): DataFrame = {
     val schema = graft.Tables.eventsRaw(spark, sf).schema
-    val dir = streamRoot(spark, sf, "ev_ddup")
-    val out = dir.resolve("out").toString
-    val ckpt = dir.resolve("ckpt").toString
     def src(): DataFrame =
       eventsStream(spark, sf, schema)
         .withColumn("ts2", timestamp_micros(graft.Tables.tsUsExpr(schema)))
         .withWatermark("ts2", "10 minutes")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts2"))
-    withConfs(spark, NoFlushConfs) {
-      val q = src().union(src())
+    appendToParquet(spark, streamRoot(spark, sf, "ev_ddup"), NoFlushConfs) {
+      src().union(src())
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("user_id"), col("event_type"),
           ntz(col("ts2")).as("ts2"))
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out).orderBy("event_id")
+    }.orderBy("event_id")
   }
 
   /** Stream-STATIC enrichment — the most common production streaming
@@ -428,11 +406,8 @@ object StreamDemo {
       graft.operators.Gates.BroadcastByteCap)(
       graft.Tables.customer(spark, sf)
         .select(col("c_custkey"), col("c_mktsegment")))
-    val dir = streamRoot(spark, sf, "ev_enrich")
-    val out = dir.resolve("out").toString
-    val ckpt = dir.resolve("ckpt").toString
-    withConfs(spark, StateConfs) {
-      val q = eventsStream(spark, sf, schema)
+    appendToParquet(spark, streamRoot(spark, sf, "ev_enrich"), StateConfs) {
+      eventsStream(spark, sf, schema)
         .withColumn("ts2", timestamp_micros(graft.Tables.tsUsExpr(schema)))
         .withWatermark("ts2", "10 minutes")
         .join(dim, col("user_id") === col("c_custkey"))
@@ -441,12 +416,7 @@ object StreamDemo {
           sum(graft.Tables.dec(col("value"))).cast("double").as("sum_val"))
         .select(ntz(col("window.start")).as("hour_start"),
           col("c_mktsegment"), col("cnt"), col("sum_val"))
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(out).orderBy("hour_start", "c_mktsegment")
+    }.orderBy("hour_start", "c_mktsegment")
   }
 
   /** Streaming CDC-upsert via foreachBatch — the idempotent MERGE

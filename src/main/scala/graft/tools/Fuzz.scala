@@ -337,19 +337,6 @@ object Fuzz {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-fuzz")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** The golden/dump loop of both fuzzers' mains (each passes its own
     * tag, golden count and default last seed; the CLI is the same):
     *  - `--golden <jsonPath> [n]` writes seed → [[caseHash]] for the
@@ -359,7 +346,8 @@ object Fuzz {
     *    if any case failed to generate. */
   private[tools] def drive(args: Array[String], tag: String, goldens: Int,
       toSeed: Int)(gen: (SparkSession, String, Int) => (String, DataFrame, String)): Unit = {
-    val spark = session()
+    val spark = graft.Bench.session("8")
+    spark.sparkContext.setLogLevel("WARN")
     if (args.headOption.contains("--golden")) {
       val path = args(1)
       val n = args.lift(2).map(_.toInt).getOrElse(goldens)

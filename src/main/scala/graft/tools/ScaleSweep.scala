@@ -68,8 +68,7 @@ object ScaleSweep {
     // the way the q5/tumbling probes did in r14). Runs only when the
     // x2 corpus exists (CrossoverProbe synthesizes it); results ride
     // scalesweep.json as x2_* keys.
-    val x2Dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_X2_DIR",
-      "target/crossover/x100")
+    val x2Dir = "target/crossover/x100"
     val x2Queries = Seq("graph_pagerank", "graph_triangles")
     val x2Ready = java.nio.file.Files.exists(
       java.nio.file.Paths.get(x2Dir, "_GRAFT_X_DONE"))
@@ -104,8 +103,7 @@ object ScaleSweep {
       s""""flag_ratio":$flagRatio,"flagged":$flaggedJson,""" +
       s""""protocol":"prepared count(), warm+min-of-2 per corpus, local[32] bench config",""" +
       s""""ratios":${jm(ratios)},"base_s":${jm(tBase)},"x_s":${jm(tX)}$x2Block}"""
-    val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_SCALESWEEP_OUT", "scalesweep.json"))
+    val outPath = java.nio.file.Paths.get(graft.Bench.ScalesweepFile)
     java.nio.file.Files.write(outPath,
       (outJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     System.err.println(s"[scale] wrote $outPath")

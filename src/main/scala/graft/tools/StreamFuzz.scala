@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Differential fuzzer for the STREAMING surfaces (r19 verdict #5):
@@ -151,27 +150,13 @@ object StreamFuzz {
       "RANGE BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING) AS pm FROM bm) "
 
   /** Run one streaming query to a fresh parquet sink + checkpoint and
-    * read the committed output back (the StreamDemo pattern, minus
-    * checkpoint reuse — every fuzz case is its own cold stream). */
+    * read the committed output back (every fuzz case is its own cold
+    * stream, no checkpoint reuse). */
   private def runStream(spark: SparkSession, dir: String, name: String,
-      streamed: DataFrame): DataFrame = {
-    val root = s"$dir/_stream_scratch/$name"
-    val out = s"$root/out"; val ckpt = s"$root/ckpt"
-    graft.GraftSession.withConfs(spark, Seq("spark.sql.shuffle.partitions" -> "4")) {
-      streamed.writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
-    }
-    val parts = new java.io.File(out).listFiles()
-    val hasOutput = parts != null && parts.exists(f =>
-      f.getName.startsWith("part-") && f.length > 0)
-    if (!hasOutput)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(streamed.schema.fields.map(_.copy(nullable = true))))
-    else spark.read.parquet(out)
-  }
+      streamed: DataFrame): DataFrame =
+    graft.streaming.StreamDemo.appendToParquet(spark,
+      java.nio.file.Paths.get(dir, "_stream_scratch", name),
+      Seq("spark.sql.shuffle.partitions" -> "4"))(streamed)
 
   /** One streaming fuzz case: (name, executed result as a batch
     * DataFrame, DuckDB oracle SQL). The DataFrame is the read-back of

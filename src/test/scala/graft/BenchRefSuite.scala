@@ -500,4 +500,128 @@ class BenchRefSuite extends AnyFunSuite {
     assert(Bench.overRef(ref, "small", 0.13))    // 3.25x and +90 ms
     assert(!Bench.overRef(ref, "unknown", 99.0)) // no entry never flags
   }
+
+  /** Scripted stand-ins for the prepared timer and the /proc/stat steal
+    * counter: the i-th `time(q)` returns q's i-th scripted (sec, steal
+    * jiffies, ok) — repeating the last entry — and advances the
+    * cumulative steal counter by that run's steal, so each sample's
+    * steal window reads exactly its scripted value. */
+  private class Script(plan: Map[String, Seq[(Double, Long, Boolean)]],
+      stealReadable: Boolean = true) {
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    var quiets = 0
+    private var cum = 0L
+    def time(q: String): (Double, Boolean) = {
+      val p = plan(q)
+      val (sec, st, ok) = p(math.min(calls.count(_ == q), p.size - 1))
+      calls += q; cum += st
+      (sec, ok)
+    }
+    def sweep(queries: Seq[String], ref: Map[String, Double] = Map.empty): Bench.Sweep =
+      Bench.sweep(queries, time, () => if (stealReadable) cum else -1L,
+        () => quiets += 1, ref, cpus = 4)
+  }
+  private def clean(sec: Double*) = sec.map(s => (s, 0L, true))
+
+  test("sweep: two interleaved passes, a third only for queries under 0.3 s") {
+    val sc = new Script(Map("slow" -> clean(1.0), "fast" -> clean(0.2),
+      "edge" -> clean(0.3), "mixed" -> clean(0.5, 0.25)))
+    val s = sc.sweep(Seq("slow", "fast", "edge", "mixed"))
+    assert(sc.calls == Seq("slow", "fast", "edge", "mixed",
+      "slow", "fast", "edge", "mixed", "fast", "mixed"))
+    assert(s.results == Seq("slow" -> 1.0, "fast" -> 0.2, "edge" -> 0.3, "mixed" -> 0.25))
+    assert(s.samples.map(_._2.size) == Seq(2, 3, 2, 3))
+    // A 2x pass disagreement with READABLE steal is not a trigger.
+    assert(s.retimed.isEmpty && sc.quiets == 0 && !s.contaminated)
+    assert(s.stealDelta == Some(0L) && math.abs(s.total - 1.75) < 1e-9)
+  }
+
+  test("sweep: a steal-suspect best sample is retimed; one still suspect after 3 retimes contaminates") {
+    // cpus=4: a 1.0 s window is suspect above max(50, 0.25*1.0*4*100) = 100 jiffies.
+    val sc = new Script(Map("q" -> Seq((1.0, 500L, true), (1.2, 500L, true),
+      (0.9, 0L, true))))
+    val s = sc.sweep(Seq("q"))
+    assert(sc.calls.size == 3 && sc.quiets == 1)
+    assert(s.retimed == Seq("q") && s.results == Seq("q" -> 0.9))
+    assert(s.suspect.isEmpty && !s.contaminated)
+    assert(s.samples.head._2.map(_.steal) == Seq(500L, 500L, 0L))
+    val stuck = new Script(Map("q" -> Seq((1.0, 500L, true))))
+    val t = stuck.sweep(Seq("q"))
+    assert(stuck.calls.size == 5 && stuck.quiets == 3, "at most 3 retimes per query")
+    assert(t.retimed == Seq("q") && t.suspect == Seq("q") && t.contaminated)
+    assert(t.stealDelta == Some(2500L))
+  }
+
+  test("sweep: an over-ref best sample is retimed; one still over after 3 retimes contaminates") {
+    val ref = Map("q" -> 0.5)
+    val sc = new Script(Map("q" -> clean(1.0, 1.0, 0.6)))
+    val s = sc.sweep(Seq("q"), ref)
+    assert(sc.calls.size == 3 && s.retimed == Seq("q"))
+    assert(s.results == Seq("q" -> 0.6) && s.overRef.isEmpty && !s.contaminated)
+    val stuck = new Script(Map("q" -> clean(1.0)))
+    val t = stuck.sweep(Seq("q"), ref)
+    assert(stuck.calls.size == 5 && t.overRef == Seq("q") && t.suspect.isEmpty)
+    assert(t.contaminated && t.summary.flaggedN == 1)
+  }
+
+  test("sweep: with steal unreadable, a >1.5x pass disagreement triggers a retime") {
+    val sc = new Script(Map("split" -> clean(1.0, 2.0, 1.1), "agree" -> clean(1.0, 1.4)),
+      stealReadable = false)
+    val s = sc.sweep(Seq("split", "agree"))
+    // The disagreement stays in the sample set, so all 3 retimes run.
+    assert(sc.calls.count(_ == "split") == 5 && sc.calls.count(_ == "agree") == 2)
+    assert(s.retimed == Seq("split") && s.results == Seq("split" -> 1.0, "agree" -> 1.0))
+    assert(s.suspect.isEmpty && !s.contaminated && s.stealDelta.isEmpty)
+    assert(s.samples.forall(_._2.forall(_.steal == -1L)))
+  }
+
+  test("sweep: retimes stop at 60 for the whole sweep") {
+    val qs = (1 to 25).map(i => f"q$i%02d")
+    val sc = new Script(qs.map(_ -> Seq((1.0, 500L, true))).toMap)
+    val s = sc.sweep(qs)
+    assert(sc.quiets == 60 && sc.calls.size == 2 * 25 + 60)
+    assert(s.retimed == qs.take(20), "the first 20 queries spend the budget, 3 each")
+    assert(s.suspect == qs && s.contaminated)
+  }
+
+  test("sweep: a query with any failed run scores -1 and stays out of the total") {
+    val sc = new Script(Map("bad" -> Seq((1.0, 0L, true), (0.01, 0L, false)),
+      "dead" -> Seq((0.01, 0L, false)), "good" -> clean(2.0)))
+    val s = sc.sweep(Seq("bad", "dead", "good"))
+    assert(s.results == Seq("bad" -> -1.0, "dead" -> -1.0, "good" -> 2.0))
+    assert(s.total == 2.0 && s.retimed.isEmpty && !s.contaminated)
+    // A failed fast run never earns a third pass: only ok runs count.
+    assert(sc.calls.size == 6)
+  }
+
+  test("retryOnce: only a contaminated first sweep is re-run, after a quiet wait") {
+    val dirty = new Script(Map("q" -> Seq((1.0, 500L, true))))
+    var quiets = 0
+    val two = Bench.retryOnce(dirty.sweep(Seq("q")), () => quiets += 1)
+    assert(two.size == 2 && two.forall(_.contaminated) && quiets == 1)
+    assert(dirty.calls.size == 10, "the retry is a whole second sweep")
+    val cleanRun = new Script(Map("q" -> clean(1.0)))
+    assert(Bench.retryOnce(cleanRun.sweep(Seq("q")), () => quiets += 1).size == 1)
+    assert(quiets == 1 && cleanRun.calls.size == 2)
+  }
+
+  test("only the known SPARK_GRAFT_* env vars are read under src/main") {
+    // Every env var is an option someone must know about; a value with
+    // one setting in use is a constant. Deployment paths and the
+    // documented run knobs are the whole list.
+    val allowed = Set("SF_DIR", "CPUS", "REF_OUT", "REF_FORCE", "LOCAL_DIR",
+      "STARVE", "STARVE_SCALE", "X2").map("SPARK_GRAFT_" + _)
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) files(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val read = """sys\.env(?:\.get|\.getOrElse|\.contains)?\(\s*"([^"]+)"""".r
+    val reads = for {
+      f <- files(new java.io.File("src/main"))
+      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .split("\n").zipWithIndex
+      if line.contains("sys.env") || line.contains("System.getenv")
+    } yield (s"${f.getPath}:${i + 1}", read.findFirstMatchIn(line).map(_.group(1)))
+    assert(reads.nonEmpty, "no sys.env read found: the guard would pass vacuously")
+    val bad = reads.collect { case (at, k) if !k.exists(allowed) => s"$at: ${k.getOrElse("?")}" }
+    assert(bad.isEmpty, s"env reads outside the allowed list:\n${bad.mkString("\n")}")
+  }
 }

@@ -178,6 +178,23 @@ class EdgeCaseSuite extends SparkTestBase {
         "output, not the empty fallback")
   }
 
+  test("appendStream: zero-row source yields zero windows with the populated schema") {
+    import graft.streaming.StreamDemo
+    // Same zero-row events file as the tumblingStream case, through
+    // the shared append-to-parquet runner: zero windows, and the same
+    // columns as a populated run.
+    val dir = Tables.scratchDir("graft_empty_append_sf_")
+    val tmp = dir.resolve("tmp").toString
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      spark.read.parquet(s"$sf/events.parquet").schema).coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.startsWith("part-")).get
+    java.nio.file.Files.copy(part.toPath, dir.resolve("events.parquet"))
+    val empty = StreamDemo.appendStream(spark, dir.toString)
+    assert(empty.count() == 0, "zero-row source must yield zero windows")
+    assert(empty.schema == StreamDemo.appendStream(spark, sf).schema)
+  }
+
   test("tumblingStream: directory-layout events table streams the same rows as the file layout") {
     import graft.streaming.StreamDemo
     // Lakehouse corpora (and the CrossoverProbe ×N corpora) ship
